@@ -6,6 +6,7 @@ import org.apache.spark.sql.functions._
 import graft.model.Manifests
 import graft.model.Manifests.{CollectionExport, DatasetTypeExport, ExportIndex}
 import graft.ops.Windows
+import graft.model.Tables
 
 /** The Exporter-shaped pipeline (reference exporter.py:33-167 /
   * export_dp1.py:65-125), Spark-first:
@@ -146,7 +147,8 @@ object Export {
         require(e.sourceKeys.size == e.targetJoinColumns.size,
           s"expansion ${e.target.name}: key arity mismatch")
         val spark = e.target.records.sparkSession
-        val keys = spark.read.parquet(s"$outDir/dimensions/${e.sourceDimension}")
+        val keys = Tables.parquet(spark,
+            s"$outDir/dimensions/${e.sourceDimension}")
           .select(e.sourceKeys.map(col): _*).distinct()
         val cond = e.targetJoinColumns.zip(e.sourceKeys)
           .map { case (t, s) => e.target.records(t) === keys(s) }

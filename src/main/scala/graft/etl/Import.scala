@@ -7,6 +7,7 @@ import org.apache.spark.sql.functions._
 
 import graft.model.Manifests
 import graft.ops.{Aggregates, Relational}
+import graft.model.Tables
 
 /** The Importer-shaped pipeline (reference importer.py:33-126),
   * Spark-first:
@@ -98,7 +99,7 @@ object Import {
     require(uncataloged.isEmpty,
       s"dataset types absent from dataset_types.json: ${uncataloged.mkString(", ")}")
     catalog.foreach { dt =>
-      val actual = spark.read.parquet(s"$exportDir/datasets/${dt.name}").columns.toSet
+      val actual = Tables.parquet(spark, s"$exportDir/datasets/${dt.name}").columns.toSet
       val declared = Set("dataset_id", "run") ++ dt.dimensions
       require(actual == declared,
         s"dataset type ${dt.name}: parquet schema ${actual.toSeq.sorted.mkString("(", ",", ")")} " +
@@ -121,11 +122,11 @@ object Import {
     val dimCounts = ordered
       .filter(index.dimensions.contains) // virtual dims have no table (importer.py:64-68)
       .map { dim =>
-        val incoming = spark.read.parquet(s"$exportDir/dimensions/$dim")
+        val incoming = Tables.parquet(spark, s"$exportDir/dimensions/$dim")
         val targetPath = s"$targetDir/dimensions/$dim"
         val existing =
           if (Files.exists(Paths.get(targetPath)))
-            Some(spark.read.parquet(targetPath))
+            Some(Tables.parquet(spark, targetPath))
           else None
         val fresh = existing
           .map(ex => Relational.antiJoin(incoming, ex, dimensionKeys(dim)))
@@ -139,7 +140,7 @@ object Import {
 
     // datasets: partitioned by run (importer.py:79-97)
     val dsCounts = effTypes.map { t =>
-      val ds = spark.read.parquet(s"$exportDir/datasets/$t")
+      val ds = Tables.parquet(spark, s"$exportDir/datasets/$t")
       val obs = org.apache.spark.sql.Observation(s"import_ds_$t")
       ds.observe(obs, count(lit(1)).as("n"))
         .write.mode("overwrite").partitionBy("run")
@@ -165,7 +166,7 @@ object Import {
     // persisted: consumed by the two routed writes AND the report
     // counts below — without it the whole union re-runs per action
     val assoc = effTypes
-      .map(t => spark.read.parquet(s"$exportDir/associations/$t"))
+      .map(t => Tables.parquet(spark, s"$exportDir/associations/$t"))
       .reduce(_ unionByName (_, allowMissingColumns = true))
       .withColumn("__ctype", typeOf)
       .persist()
@@ -195,7 +196,7 @@ object Import {
       val targetPath = s"$targetDir/$table"
       val existing =
         if (Files.exists(Paths.get(targetPath)))
-          Some(spark.read.parquet(targetPath))
+          Some(Tables.parquet(spark, targetPath))
         else None
       existing
         .map(_.unionByName(incoming, allowMissingColumns = true))
@@ -219,7 +220,7 @@ object Import {
     // function first (datastore_mapping.py:47-52); declaratively that
     // is a column rewrite applied before grouping.
     val datastore = {
-      val raw = spark.read.parquet(s"$exportDir/datastore")
+      val raw = Tables.parquet(spark, s"$exportDir/datastore")
       val renamed = datastoreRename.foldLeft(col("datastore_name")) {
         case (acc, (from, to)) => when(col("datastore_name") === from, to).otherwise(acc)
       }
@@ -238,7 +239,7 @@ object Import {
       val targetPath = s"$targetDir/datastore"
       val incoming = nested.observe(nestedObs, count(lit(1)).as("n"))
       if (Files.exists(Paths.get(targetPath))) {
-        val existing = spark.read.parquet(targetPath)
+        val existing = Tables.parquet(spark, targetPath)
         existing.unionByName(
           Relational.antiJoin(incoming, existing,
             Seq("datastore_name", "dataset_id")),

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.ops.Windows
+import graft.model.Tables
 
 /** Durable IVF-PQ ANN index — the production lifecycle around
   * [[Similarity]]'s in-plan components ([[Similarity.kmeansRefine]],
@@ -301,7 +302,7 @@ object AnnIndex {
 
   private def openCodeSegment(spark: SparkSession, root: String,
                               sid: String): DataFrame =
-    spark.read.parquet(segDir(root, sid))
+    Tables.parquet(spark, segDir(root, sid))
       // partitionBy wrote icell as a directory column — restore the
       // stored column order AND the bigint type (partition inference
       // may narrow small cell ids to int, which would miscompile the
@@ -401,8 +402,8 @@ object AnnIndex {
     // artifacts — those upgrade to catalog segments on the next commit
     def catalog(key: String, legacyDir: String): DataFrame =
       mf.get(key) match {
-        case Some(sid) => spark.read.parquet(segDir(path, sid))
-        case None => spark.read.parquet(s"$dir/$legacyDir")
+        case Some(sid) => Tables.parquet(spark, segDir(path, sid))
+        case None => Tables.parquet(spark, s"$dir/$legacyDir")
       }
     new AnnIndex(
       catalog("centseg", "centroids"),
@@ -499,9 +500,9 @@ object AnnIndex {
       case _ =>
         parJobs(
           () => writeCatalogSegment(
-            spark.read.parquet(s"$dir0/centroids"), path, s"n$v"),
+            Tables.parquet(spark, s"$dir0/centroids"), path, s"n$v"),
           () => writeCatalogSegment(
-            spark.read.parquet(s"$dir0/pqcent"), path, s"b$v"))
+            Tables.parquet(spark, s"$dir0/pqcent"), path, s"b$v"))
         (s"n$v", s"b$v")
     }
     graft.ops.Staging.writeManifest(dir, (mf - "csegs") ++

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 import graft.ext.TextHash._
+import graft.model.Tables
 
 /** Large-scale document deduplication operators ([EXT]).
   *
@@ -1592,12 +1593,12 @@ object DupGraph {
     // single pairs segment) — a scheduled periodic prune must not pay
     // a full corpus rewrite for zero effect every time
     if (!keepPairs && compactAlready && psegs.nonEmpty &&
-      spark.read.parquet(segDir(path, psegs.head)).isEmpty) return
+      Tables.parquet(spark, segDir(path, psegs.head)).isEmpty) return
     val buckets = mf.get("buckets").map(_.toInt).getOrElse(0)
     val (dir, v) = graft.ops.Staging.nextVersionDir(path, store)
-    val index = isegs.map(sid => spark.read.parquet(segDir(path, sid)))
+    val index = isegs.map(sid => Tables.parquet(spark, segDir(path, sid)))
       .reduce(_.unionByName(_))
-    val foldedPairs = psegs.map(sid => spark.read.parquet(segDir(path, sid)))
+    val foldedPairs = psegs.map(sid => Tables.parquet(spark, segDir(path, sid)))
       .reduce(_.unionByName(_))
     // the three rewrites read disjoint stored segments — concurrent
     // (graft.ops.Staging.parJobs), same as the ingest commit's writes.
@@ -1612,7 +1613,7 @@ object DupGraph {
         if (keepPairs) foldedPairs else foldedPairs.limit(0), path, s"p$v"),
       () => writePlainSegment(
         if (clsegs.nonEmpty) effectiveClusters(spark, path, clsegs)
-        else spark.read.parquet(s"$dir0/clusters"), // r15-early layout
+        else Tables.parquet(spark, s"$dir0/clusters"), // r15-early layout
         path, s"k$v"))
     graft.ops.Staging.writeManifest(dir,
       (mf - "isegs" - "psegs" - "clsegs") ++
@@ -1629,7 +1630,7 @@ object DupGraph {
   private def effectiveClusters(spark: org.apache.spark.sql.SparkSession,
                                 path: String,
                                 clsegs: Seq[String]): DataFrame =
-    clsegs.map(sid => spark.read.parquet(segDir(path, sid)))
+    clsegs.map(sid => Tables.parquet(spark, segDir(path, sid)))
       .reduce(_.unionByName(_))
       .groupBy("doc_id").agg(min("cluster_id").as("cluster_id"))
 
@@ -1679,7 +1680,7 @@ object DupGraph {
     val clsegs = graft.ops.Staging.segList(mf, "clsegs")
     val clusters =
       if (clsegs.nonEmpty) effectiveClusters(spark, path, clsegs)
-      else spark.read.parquet(s"$dir/clusters")
+      else Tables.parquet(spark, s"$dir/clusters")
     val n = mf.get("n").map(_.toInt).getOrElse(3)
     val threshold = mf.get("threshold").map(_.toDouble).getOrElse(0.5)
     // pre-manifest artifacts carry GUESSED defaults — flag them so
@@ -1688,13 +1689,13 @@ object DupGraph {
     val declared = mf.contains("n") && mf.contains("threshold")
     def openIndex(d: String): DataFrame =
       if (buckets > 0) graft.ops.Layout.readBucketedTable(spark, d, "s", buckets)
-      else spark.read.parquet(d)
+      else Tables.parquet(spark, d)
     mf.get("isegs") match {
       case Some(is) => // segmented layout
         val isegs = is.split(',').toSeq.filter(_.nonEmpty)
         val psegs = graft.ops.Staging.segList(mf, "psegs")
         new DupGraph(
-          psegs.map(sid => spark.read.parquet(segDir(path, sid)))
+          psegs.map(sid => Tables.parquet(spark, segDir(path, sid)))
             .reduce(_.unionByName(_)),
           clusters,
           () => isegs.map(sid => openIndex(segDir(path, sid))),
@@ -1705,7 +1706,7 @@ object DupGraph {
             deltaCls = Seq.empty)))
       case None => // legacy single-dir layout
         new DupGraph(
-          spark.read.parquet(s"$dir/pairs"),
+          Tables.parquet(spark, s"$dir/pairs"),
           clusters,
           () => Seq(openIndex(s"$dir/index")),
           owned = Seq.empty,

@@ -2,6 +2,7 @@ package graft.ext
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.model.Tables
 
 /** Durable banded-hamming fingerprint index — the incremental dedup
   * lifecycle for PERCEPTUAL fingerprints (image dHash, audio
@@ -172,7 +173,7 @@ final class HammingIndex private[ext] (
       () => isegs.map(sid =>
         HammingIndex.openIndexSegment(spark, path, sid, buckets)),
       () => psegs.map(sid =>
-        spark.read.parquet(HammingIndex.segDir(path, sid))),
+        Tables.parquet(spark, HammingIndex.segDir(path, sid))),
       maxDist, bands, bits, buckets,
       lineage = Some(HammingIndex.Lineage(path, isegs, psegs,
         ideltas = Seq.empty, pdeltas = Seq.empty)))
@@ -251,7 +252,7 @@ object HammingIndex {
     val d = segDir(root, sid)
     if (buckets > 0)
       graft.ops.Layout.readBucketedTable(spark, d, "bkey", buckets)
-    else spark.read.parquet(d)
+    else Tables.parquet(spark, d)
   }
 
   /** Build the initial index from the day-1 fingerprint frame
@@ -287,7 +288,7 @@ object HammingIndex {
     val psegs = graft.ops.Staging.segList(mf, "psegs")
     new HammingIndex(
       () => isegs.map(sid => openIndexSegment(spark, path, sid, buckets)),
-      () => psegs.map(sid => spark.read.parquet(segDir(path, sid))),
+      () => psegs.map(sid => Tables.parquet(spark, segDir(path, sid))),
       maxDist = mf("maxDist").toInt, bands = mf("bands").toInt,
       bits = mf("bits").toInt, buckets = buckets,
       lineage = Some(Lineage(path, isegs, psegs,
@@ -335,10 +336,10 @@ object HammingIndex {
     val buckets = rebucket.getOrElse(mf("buckets").toInt)
     graft.ops.Staging.parJobs(
       () => writeIndexSegment(
-        isegs.map(sid => spark.read.parquet(segDir(path, sid)))
+        isegs.map(sid => Tables.parquet(spark, segDir(path, sid)))
           .reduce(_.unionByName(_)), path, s"i$v", buckets),
       () => writePairSegment(
-        psegs.map(sid => spark.read.parquet(segDir(path, sid)))
+        psegs.map(sid => Tables.parquet(spark, segDir(path, sid)))
           .reduce(_.unionByName(_)), path, s"p$v"))
     graft.ops.Staging.writeManifest(dir,
       (mf - "isegs" - "psegs") ++ Map("isegs" -> s"i$v", "psegs" -> s"p$v",

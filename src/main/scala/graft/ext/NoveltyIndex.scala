@@ -2,6 +2,7 @@ package graft.ext
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.model.Tables
 
 /** Durable seen-shingle index — the artifact behind
   * [[TextAnalysis.noveltyRateIncremental]]'s production loop: the set
@@ -179,7 +180,7 @@ object NoveltyIndex {
                           buckets: Int): DataFrame = {
     val d = segDir(root, sid)
     if (buckets > 0) graft.ops.Layout.readBucketedTable(spark, d, "sh", buckets)
-    else spark.read.parquet(d)
+    else Tables.parquet(spark, d)
   }
 
   /** True iff a complete committed version exists at `path`. */
@@ -215,7 +216,7 @@ object NoveltyIndex {
     if (ssegs.size <= 1) return
     val (dir, v) = graft.ops.Staging.nextVersionDir(path, store)
     writeSegment(
-      ssegs.map(sid => spark.read.parquet(segDir(path, sid)))
+      ssegs.map(sid => Tables.parquet(spark, segDir(path, sid)))
         .reduce(_.unionByName(_)),
       path, s"s$v", mf("buckets").toInt)
     graft.ops.Staging.writeManifest(dir, (mf - "ssegs") + ("ssegs" -> s"s$v"))

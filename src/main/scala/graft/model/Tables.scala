@@ -1,5 +1,6 @@
 package graft.model
 
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.{col, expr}
 import org.apache.spark.sql.types._
@@ -18,9 +19,10 @@ object Tables {
     "region", "nation", "customer", "supplier", "part",
     "orders", "lineitem", "events", "documents", "embeddings")
 
-  /** Load one testdata table. Plain columnar scan — Catalyst pushes any
-    * later select/filter into the parquet reader (column pruning +
-    * predicate pushdown).
+  /** Load one testdata table. Plain columnar scan through [[parquet]]
+    * (schema memoized per session, so a warm load launches no Spark
+    * job) — Catalyst pushes any later select/filter into the parquet
+    * reader (column pruning + predicate pushdown).
     *
     * Timestamp-unit normalization (FIXTURES.md caveat / SURVEY.md §7.6):
     * the testdata generator has shipped events.ts in several physical
@@ -43,7 +45,92 @@ object Tables {
     val nanosKey = "spark.sql.legacy.parquet.nanosAsLong"
     if (spark.conf.getOption(nanosKey).forall(_ != "true"))
       spark.conf.set(nanosKey, "true")
-    normalizeTs(spark.read.parquet(s"$dir/$name.parquet"))
+    normalizeTs(parquet(spark, s"$dir/$name.parquet"))
+  }
+
+  /** Read the Parquet file or directory at `path` — the one read path of
+    * the engine (tables, index segments, artifacts). The schema comes
+    * from a per-session memo, so a warm read reads no footer and
+    * launches no Spark job; Spark's own inference (one footer-reading
+    * job per call) runs only on a memo miss, whose inferring read is
+    * returned as is.
+    *
+    * Memo contract:
+    *   - key: the path; the sorted (file path, length, mtime) listing of
+    *     every file under it (one recursive Hadoop `listFiles`); and the
+    *     session values of the confs in [[InferenceConfs]]. A file that
+    *     is rewritten, added or removed, or a conf flip, misses and is
+    *     inferred again — so the `ts` encoding [[normalizeTs]] sees is
+    *     always the one on disk now.
+    *   - value: the inferred schema, i.e. metadata only. No plan, no
+    *     query output and no file listing is reused across reads: every
+    *     call builds a fresh relation over the files present then.
+    *   - scope: one memo per `SparkSession`, held weakly, so it is
+    *     released with the session; least-recently-used entries past
+    *     [[MemoEntries]] are dropped (a long-lived streaming session
+    *     opens a new segment dir per batch).
+    *   - a failed inference (missing path, dir with no data file) is
+    *     not cached and throws exactly as `spark.read.parquet` does.
+    */
+  def parquet(spark: SparkSession, path: String): DataFrame = {
+    val key = SchemaKey(path, listing(spark, path),
+      InferenceConfs.map(k => spark.conf.getOption(k).getOrElse("")))
+    def memo = memos.computeIfAbsent(spark, _ => new SchemaMemo)
+    memos.synchronized(Option(memo.get(key))) match {
+      case Some(schema) => spark.read.schema(schema).parquet(path)
+      case None =>
+        val df = spark.read.parquet(path) // infers; throws on failure
+        memos.synchronized(memo.put(key, df.schema))
+        df
+    }
+  }
+
+  /** Session confs that change what Parquet schema inference returns
+    * (partition-column type inference included: a partitioned dir's
+    * partition columns take their types from the declared schema).
+    */
+  private val InferenceConfs = Seq(
+    "spark.sql.legacy.parquet.nanosAsLong",
+    "spark.sql.parquet.binaryAsString",
+    "spark.sql.parquet.int96AsTimestamp",
+    "spark.sql.parquet.inferTimestampNTZ.enabled",
+    "spark.sql.parquet.mergeSchema",
+    "spark.sql.caseSensitive",
+    "spark.sql.sources.partitionColumnTypeInference.enabled")
+
+  private val MemoEntries = 1024
+
+  private final case class SchemaKey(path: String,
+                                     files: Seq[(String, Long, Long)],
+                                     confs: Seq[String])
+
+  private final class SchemaMemo
+      extends java.util.LinkedHashMap[SchemaKey, StructType](16, 0.75f, true) {
+    override def removeEldestEntry(
+        e: java.util.Map.Entry[SchemaKey, StructType]): Boolean =
+      size > MemoEntries
+  }
+
+  /** Guarded by its own lock, which also guards every memo in it. */
+  private val memos = new java.util.WeakHashMap[SparkSession, SchemaMemo]
+
+  /** Sorted (path, length, mtime) of every file under `path` (the file
+    * itself for a single-file table); empty when `path` is absent.
+    */
+  private def listing(spark: SparkSession,
+                      path: String): Seq[(String, Long, Long)] = {
+    val p = new Path(path)
+    val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
+    if (!fs.exists(p)) Seq.empty
+    else {
+      val it = fs.listFiles(p, true)
+      val files = Seq.newBuilder[(String, Long, Long)]
+      while (it.hasNext) {
+        val f = it.next()
+        files += ((f.getPath.toString, f.getLen, f.getModificationTime))
+      }
+      files.result().sorted
+    }
   }
 
   /** The `ts` normalization alone, for callers that build their own

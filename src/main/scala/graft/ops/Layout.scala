@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 import graft.functions.LayoutFunctions
+import graft.model.Tables
 
 /** Multi-dimensional data-layout clustering (write optimization).
   *
@@ -139,7 +140,18 @@ object Layout {
     // Spark job per segment commit that RE-EVALUATED the whole input
     // plan when the caller's delta was not yet materialized (the
     // day-1 build paid its corpus shingle scan twice).
-    if (!graft.ops.Staging.list(dir).exists(_.startsWith("part-"))) {
+    // Only a listing of nothing but `_SUCCESS` and hidden (`.crc`)
+    // files counts as empty: an entry of any other name is output this
+    // guard does not recognize (a committer that names files
+    // differently, an incomplete listing), so fail loudly rather than
+    // replace a possibly non-empty segment with an empty one.
+    val entries = graft.ops.Staging.list(dir)
+    if (!entries.exists(_.startsWith("part-"))) {
+      val foreign = entries.filterNot(n => n == "_SUCCESS" || n.startsWith("."))
+      if (foreign.nonEmpty)
+        throw new IllegalStateException(s"bucketed write to $dir left " +
+          s"unrecognized entries ${foreign.sorted.mkString(", ")} and no " +
+          "part- file; refusing to rewrite it as an empty segment")
       graft.ops.Staging.deleteTree(dir)
       df.limit(0).coalesce(1).write.parquet(dir)
       graft.ops.Staging.writeString(s"$dir/$EmptyMarker", "")
@@ -170,12 +182,12 @@ object Layout {
                         dir: String, key: String, buckets: Int): DataFrame =
     bucketedLock.synchronized {
       if (graft.ops.Staging.exists(s"$dir/$EmptyMarker"))
-        return spark.read.parquet(dir) // empty segment, written plain
+        return Tables.parquet(spark, dir) // empty segment, written plain
       val name = bucketedName(dir)
       if (!spark.catalog.tableExists(name)) {
         // CLUSTERED BY requires an explicit column list — take it from
         // the parquet footers (id column type is caller-defined)
-        val ddl = spark.read.parquet(dir).schema.toDDL
+        val ddl = Tables.parquet(spark, dir).schema.toDDL
         spark.sql(s"CREATE TABLE `$name` ($ddl) USING parquet " +
           s"CLUSTERED BY (`$key`) SORTED BY (`$key`) INTO $buckets BUCKETS " +
           s"LOCATION '$dir'")

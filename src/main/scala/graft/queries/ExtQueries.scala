@@ -3393,7 +3393,7 @@ object ExtQueries {
         .write.parquet(mediaFpDir)
       // both engines consume the WRITTEN table (same bytes), then run
       // the identical drop rule + banded hamming dedup
-      val fps = s.read.parquet(mediaFpDir)
+      val fps = Tables.parquet(s, mediaFpDir)
         .filter(col("kind") === "image" && col("fp").isNotNull)
         .select(col("media_id").as("doc_id"), col("fp"))
       // eager: the result (pair-table-sized) must not stay a lazy plan
@@ -3455,7 +3455,7 @@ object ExtQueries {
       graft.ops.Staging.deleteTree(audioFpDir)
       graft.ext.Multimodal.audioFingerprints(clips).toDF()
         .write.parquet(audioFpDir)
-      val fps = s.read.parquet(audioFpDir)
+      val fps = Tables.parquet(s, audioFpDir)
         .filter(col("kind") === "audio" && col("fp").isNotNull)
         .select(col("media_id").as("doc_id"), col("fp"))
       // eager for the same reason as q_media_dedup: the shared
@@ -3511,7 +3511,7 @@ object ExtQueries {
       graft.ops.Staging.deleteTree(videoFpDir)
       graft.ext.Multimodal.videoFingerprints(vids).toDF()
         .write.parquet(videoFpDir)
-      val fps = s.read.parquet(videoFpDir)
+      val fps = Tables.parquet(s, videoFpDir)
         .filter(col("kind") === "video" && col("fp").isNotNull)
         .select(col("media_id").as("doc_id"), col("fp"))
       Dedup.simhashHammingPairs(fps, maxDist = 3, bands = 4, bits = 64)
@@ -3564,7 +3564,7 @@ object ExtQueries {
       graft.ops.Staging.deleteTree(gifFpDir)
       graft.ext.Multimodal.gifFingerprints(gifs).toDF()
         .write.parquet(gifFpDir)
-      val fps = s.read.parquet(gifFpDir)
+      val fps = Tables.parquet(s, gifFpDir)
         .filter(col("kind") === "gif" && col("fp").isNotNull)
         .select(col("media_id").as("doc_id"), col("fp"))
       Dedup.simhashHammingPairs(fps, maxDist = 3, bands = 4, bits = 64)
@@ -3618,7 +3618,7 @@ object ExtQueries {
       graft.ext.Multimodal.perceptualFingerprints(media).toDF()
         .unionByName(graft.ext.Multimodal.gifFingerprints(gifs).toDF())
         .write.parquet(crossFpDir)
-      val fps = s.read.parquet(crossFpDir)
+      val fps = Tables.parquet(s, crossFpDir)
         .filter(col("kind").isin("image", "gif") && col("fp").isNotNull)
         .select((col("media_id") * 4 +
           when(col("kind") === "image", 0).otherwise(1)).as("doc_id"),
@@ -3692,7 +3692,7 @@ object ExtQueries {
       graft.ops.Staging.deleteTree(videoFrameFpDir)
       graft.ext.Multimodal.videoFrameFingerprints(vids).toDF()
         .write.parquet(videoFrameFpDir)
-      val fps = s.read.parquet(videoFrameFpDir)
+      val fps = Tables.parquet(s, videoFrameFpDir)
         .filter(col("kind") === "video" && col("fp").isNotNull)
         .select((col("media_id") * 4 + col("frame_idx")).as("doc_id"),
           col("fp"))
@@ -3763,7 +3763,7 @@ object ExtQueries {
       graft.ops.Staging.deleteTree(mediaRefreshFpDir)
       graft.ext.Multimodal.perceptualFingerprints(media).toDF()
         .write.parquet(mediaRefreshFpDir)
-      val fps = s.read.parquet(mediaRefreshFpDir)
+      val fps = Tables.parquet(s, mediaRefreshFpDir)
         .filter(col("kind") === "image" && col("fp").isNotNull)
         .select(col("media_id").as("doc_id"), col("fp"))
       // pid- and fixture-qualified tmp artifact (the q_novelty_refresh

@@ -14,16 +14,19 @@ import graft.ext.HammingIndex
 object CommitProbe {
   def main(args: Array[String]): Unit = {
     val d = args.headOption.getOrElse("/root/testdata/sf0.1")
-    // committer A/B: the Sessions recipe defaults to v2; optional
-    // second arg "v1" pins the legacy serial-rename committer. Set via
-    // the BUILDER (spark.hadoop.*) so each arm is deterministic even
-    // when a warm JVM reuses a session — mutating hadoopConfiguration
-    // after getOrCreate leaked the previous run's setting into the
-    // baseline arm.
+    // committer A/B: optional second arg "v1" (the legacy serial-rename
+    // committer) or "v2" (the Sessions recipe default) names the arm;
+    // any other value fails, so a stale invocation cannot silently
+    // measure v2 against v2. Set via the BUILDER (spark.hadoop.*) so
+    // each arm is deterministic even when a warm JVM reuses a session —
+    // mutating hadoopConfiguration after getOrCreate leaked the
+    // previous run's setting into the baseline arm.
+    val arm = args.lift(1).getOrElse("v2")
+    require(arm == "v1" || arm == "v2",
+      s"CommitProbe: second argument must be v1 or v2, got '$arm'")
     val builder = graft.Sessions.localBuilder("32")
-    if (args.length > 1 && args(1) == "v1")
-      builder.config(
-        "spark.hadoop.mapreduce.fileoutputcommitter.algorithm.version", "1")
+      .config("spark.hadoop.mapreduce.fileoutputcommitter.algorithm.version",
+        arm.stripPrefix("v"))
     val spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     def leg[A](name: String)(f: => A): A = {
