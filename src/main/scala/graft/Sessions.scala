@@ -28,6 +28,17 @@ import org.apache.spark.sql.SparkSession
   *  - `spark.sql.session.timeZone = UTC`: the engine's declared-query
   *    results are timezone-exact against the oracle; a host-local
   *    zone would silently shift every date_trunc/window row.
+  *  - `file://` binds to [[graft.ops.NioLocalFileSystem]] and
+  *    [[graft.ops.NioLocalFs]] (`FileSystem` and `FileContext`): Hadoop's
+  *    local filesystem without `libhadoop` launches a `chmod`, `ls` or
+  *    `readlink` process for every file it creates, every permission
+  *    it reads and every link check — ~2,500 launches per small-commit
+  *    benchmark run, the largest fixed cost left on commit and listing.
+  *    These classes make the same calls through `java.nio`; bytes,
+  *    checksums, permissions and rename semantics are unchanged. It
+  *    binds only if this session is built before the JVM's first
+  *    `file://` access (Hadoop caches one `FileSystem` per scheme,
+  *    whatever class a later conf names), as every main here does.
   *
   * Deliberately NOT set here: `spark.sql.shuffle.partitions` (a
   * cluster sizes its own; [[localBuilder]] sets it to the local core
@@ -46,6 +57,9 @@ object Sessions {
       sys.env.getOrElse("SPARK_GRAFT_CODEGEN_CACHE", "8192"))
     .config("spark.hadoop.mapreduce.fileoutputcommitter.algorithm.version",
       "2")
+    .config("spark.hadoop.fs.file.impl", "graft.ops.NioLocalFileSystem")
+    .config("spark.hadoop.fs.AbstractFileSystem.file.impl",
+      "graft.ops.NioLocalFs")
 
   /** The harness shape: `local[cpus]` with shuffle parallelism pinned
     * to the core count (scale-adaptive — the driver re-runs the bench

@@ -1,6 +1,6 @@
 package graft.model
 
-import org.apache.hadoop.fs.Path
+import org.apache.hadoop.fs.{FileStatus, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.{col, expr}
 import org.apache.spark.sql.types._
@@ -57,7 +57,7 @@ object Tables {
     *
     * Memo contract:
     *   - key: the path; the sorted (file path, length, mtime) listing of
-    *     every file under it (one recursive Hadoop `listFiles`); and the
+    *     every file under it (a recursive Hadoop `listStatus` walk); and the
     *     session values of the confs in [[InferenceConfs]]. A file that
     *     is rewritten, added or removed, or a conf flip, misses and is
     *     inferred again — so the `ts` encoding [[normalizeTs]] sees is
@@ -115,22 +115,20 @@ object Tables {
   private val memos = new java.util.WeakHashMap[SparkSession, SchemaMemo]
 
   /** Sorted (path, length, mtime) of every file under `path` (the file
-    * itself for a single-file table); empty when `path` is absent.
+    * itself for a single-file table); empty when `path` is absent. A
+    * `listStatus` walk: `listFiles` would build a `LocatedFileStatus`
+    * per file, with block locations and a permission read (a process
+    * launch per file on a local filesystem without `libhadoop`).
     */
   private def listing(spark: SparkSession,
                       path: String): Seq[(String, Long, Long)] = {
     val p = new Path(path)
     val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
+    def walk(s: FileStatus): Seq[(String, Long, Long)] =
+      if (s.isDirectory) fs.listStatus(s.getPath).toSeq.flatMap(walk)
+      else Seq((s.getPath.toString, s.getLen, s.getModificationTime))
     if (!fs.exists(p)) Seq.empty
-    else {
-      val it = fs.listFiles(p, true)
-      val files = Seq.newBuilder[(String, Long, Long)]
-      while (it.hasNext) {
-        val f = it.next()
-        files += ((f.getPath.toString, f.getLen, f.getModificationTime))
-      }
-      files.result().sorted
-    }
+    else fs.listStatus(p).toSeq.flatMap(walk).sorted
   }
 
   /** The `ts` normalization alone, for callers that build their own

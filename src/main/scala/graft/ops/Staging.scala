@@ -24,6 +24,10 @@ import org.apache.spark.sql.SparkSession
   *    (tmp-file + rename-with-OVERWRITE via `FileContext`) give the
   *    advertised guarantee: a reader sees the old pointer or the new
   *    one, never a torn or missing pointer.
+  *  - '''local, in a [[graft.Sessions.tuned]] session''': `file://` is
+  *    [[NioLocalFileSystem]] / [[NioLocalFs]] — Hadoop's rename,
+  *    overwrite, checksum and permission semantics with no process
+  *    launched per file written, permission read or link checked.
   *  - '''S3A / object stores''': rename is copy+delete (NOT atomic).
   *    The versioned-pointer discipline still degrades safely — the
   *    pointer is a single small object, version dirs are never

@@ -4,19 +4,22 @@ import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Shared local SparkSession for all specs (one per test JVM — sbt forks
-  * a single JVM for the Test configuration, so suites reuse it).
+  * a single JVM for the Test configuration, so suites reuse it), built
+  * through [[Sessions.tuned]] so the suite runs on the conf posture the
+  * engine ships.
   */
 trait SparkSpec extends AnyFunSuite {
-  lazy val spark: SparkSession = SparkSpec.session
+  // eager: the session must exist before a spec's first `file://`
+  // access, since Hadoop caches the first class that scheme resolves to
+  val spark: SparkSession = SparkSpec.session
 }
 
 object SparkSpec {
   lazy val session: SparkSession = {
-    val s = SparkSession.builder()
+    val s = Sessions.tuned(SparkSession.builder())
       .master("local[4]")
       .appName("graft-test")
       .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     s.sparkContext.setLogLevel("WARN")

@@ -14,6 +14,9 @@ import org.scalatest.funsuite.AnyFunSuite
 class GraftExtensionsSpec extends AnyFunSuite {
 
   private def withExtendedSession[A](f: SparkSession => A): A = {
+    // the shared context must be the one SparkSpec builds (its conf
+    // posture, and its `file://` binding: built first in the JVM)
+    graft.SparkSpec.session
     val prevDefault = SparkSession.getDefaultSession
     val prevActive = SparkSession.getActiveSession
     SparkSession.clearDefaultSession()
