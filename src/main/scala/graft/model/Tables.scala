@@ -1,9 +1,17 @@
 package graft.model
 
+import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FileStatus, Path}
+import org.apache.parquet.format.converter.ParquetMetadataConverter
+import org.apache.parquet.hadoop.{Footer, ParquetFileWriter}
+import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat,
+  ParquetFooterReader, ParquetToSparkSchemaConverter}
 import org.apache.spark.sql.functions.{col, expr}
 import org.apache.spark.sql.types._
+
+import scala.util.control.NonFatal
 
 /** Catalog of the driver testdata tables (TESTDATA.md / FIXTURES.md §1) and
   * of the reference-shaped export layout (FIXTURES.md §2).
@@ -20,9 +28,10 @@ object Tables {
     "orders", "lineitem", "events", "documents", "embeddings")
 
   /** Load one testdata table. Plain columnar scan through [[parquet]]
-    * (schema memoized per session, so a warm load launches no Spark
-    * job) — Catalyst pushes any later select/filter into the parquet
-    * reader (column pruning + predicate pushdown).
+    * (schema from a per-session memo or one driver-side footer read,
+    * so a load launches no Spark job) — Catalyst pushes any later
+    * select/filter into the parquet reader (column pruning + predicate
+    * pushdown).
     *
     * Timestamp-unit normalization (FIXTURES.md caveat / SURVEY.md §7.6):
     * the testdata generator has shipped events.ts in several physical
@@ -49,11 +58,30 @@ object Tables {
   }
 
   /** Read the Parquet file or directory at `path` — the one read path of
-    * the engine (tables, index segments, artifacts). The schema comes
-    * from a per-session memo, so a warm read reads no footer and
-    * launches no Spark job; Spark's own inference (one footer-reading
-    * job per call) runs only on a memo miss, whose inferring read is
-    * returned as is.
+    * the engine (tables, index segments, artifacts). No read launches
+    * Spark's schema-inference job unless it falls back (below): a warm
+    * read takes the schema from a per-session memo, and a miss infers
+    * it on the driver from one footer.
+    *
+    * Miss path: the same single-file inference Spark's one-task job
+    * runs when schema merging is off.
+    *   - file: of the files Spark's file index would list (no entry on
+    *     the way down hidden by Spark's rule: a `_` or `.` prefix, except
+    *     `_metadata`/`_common_metadata` and names containing `=`), sorted
+    *     by path — `_common_metadata`, else `_metadata`, else the first
+    *     data file. The listing is the one the memo key walks.
+    *   - schema: that file's footer (row groups skipped), converted
+    *     under the session's binaryAsString, int96AsTimestamp,
+    *     inferTimestampNTZ, nanosAsLong and respectUnknownTypeAnnotation
+    *     values, as Spark's inference does.
+    *   - read: through `.schema(footer schema)`, so the file index still
+    *     discovers and types the partition columns of a partitioned dir.
+    * Fallback: a plain `spark.read.parquet` of the path (Spark's own
+    * inference, one job) when schema merging is on, when there is no
+    * data file (a missing path or a dir of only `_SUCCESS` and hidden
+    * files — it throws Spark's own error) and when the footer cannot be
+    * read or converted (Spark's inference then throws its own error, or
+    * skips the file under `ignoreCorruptFiles`).
     *
     * Memo contract:
     *   - key: the path; the sorted (file path, length, mtime) listing of
@@ -62,24 +90,30 @@ object Tables {
     *     is rewritten, added or removed, or a conf flip, misses and is
     *     inferred again — so the `ts` encoding [[normalizeTs]] sees is
     *     always the one on disk now.
-    *   - value: the inferred schema, i.e. metadata only. No plan, no
+    *   - value: the resulting schema, i.e. metadata only. No plan, no
     *     query output and no file listing is reused across reads: every
     *     call builds a fresh relation over the files present then.
     *   - scope: one memo per `SparkSession`, held weakly, so it is
     *     released with the session; least-recently-used entries past
     *     [[MemoEntries]] are dropped (a long-lived streaming session
     *     opens a new segment dir per batch).
-    *   - a failed inference (missing path, dir with no data file) is
-    *     not cached and throws exactly as `spark.read.parquet` does.
+    *   - a failed read is not cached and throws exactly as
+    *     `spark.read.parquet` does.
     */
   def parquet(spark: SparkSession, path: String): DataFrame = {
-    val key = SchemaKey(path, listing(spark, path),
+    val conf = spark.sessionState.newHadoopConf()
+    val files = listing(conf, path)
+    val key = SchemaKey(path,
+      files.map { case (s, _) =>
+        (s.getPath.toString, s.getLen, s.getModificationTime) },
       InferenceConfs.map(k => spark.conf.getOption(k).getOrElse("")))
     def memo = memos.computeIfAbsent(spark, _ => new SchemaMemo)
     memos.synchronized(Option(memo.get(key))) match {
       case Some(schema) => spark.read.schema(schema).parquet(path)
       case None =>
-        val df = spark.read.parquet(path) // infers; throws on failure
+        val listed = files.collect { case (s, true) => s }
+        val df = footerSchema(spark, conf, listed)
+          .fold(spark.read.parquet(path))(spark.read.schema(_).parquet(path))
         memos.synchronized(memo.put(key, df.schema))
         df
     }
@@ -94,6 +128,7 @@ object Tables {
     "spark.sql.parquet.binaryAsString",
     "spark.sql.parquet.int96AsTimestamp",
     "spark.sql.parquet.inferTimestampNTZ.enabled",
+    "spark.sql.parquet.reader.respectUnknownTypeAnnotation.enabled",
     "spark.sql.parquet.mergeSchema",
     "spark.sql.caseSensitive",
     "spark.sql.sources.partitionColumnTypeInference.enabled")
@@ -114,21 +149,71 @@ object Tables {
   /** Guarded by its own lock, which also guards every memo in it. */
   private val memos = new java.util.WeakHashMap[SparkSession, SchemaMemo]
 
-  /** Sorted (path, length, mtime) of every file under `path` (the file
-    * itself for a single-file table); empty when `path` is absent. A
-    * `listStatus` walk: `listFiles` would build a `LocatedFileStatus`
-    * per file, with block locations and a permission read (a process
-    * launch per file on a local filesystem without `libhadoop`).
+  /** Every file under `path` (the file itself for a single-file table),
+    * sorted by path, each with whether Spark's file index lists it (see
+    * [[parquet]]); empty when `path` is absent. A `listStatus` walk:
+    * `listFiles` would build a `LocatedFileStatus` per file, with block
+    * locations and a permission read (a process launch per file on a
+    * local filesystem without `libhadoop`).
     */
-  private def listing(spark: SparkSession,
-                      path: String): Seq[(String, Long, Long)] = {
+  private def listing(conf: Configuration,
+                      path: String): Seq[(FileStatus, Boolean)] = {
     val p = new Path(path)
-    val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
-    def walk(s: FileStatus): Seq[(String, Long, Long)] =
-      if (s.isDirectory) fs.listStatus(s.getPath).toSeq.flatMap(walk)
-      else Seq((s.getPath.toString, s.getLen, s.getModificationTime))
+    val fs = p.getFileSystem(conf)
+    def walk(s: FileStatus, listed: Boolean): Seq[(FileStatus, Boolean)] = {
+      val l = listed && !hidden(s.getPath.getName)
+      if (s.isDirectory) fs.listStatus(s.getPath).toSeq.flatMap(walk(_, l))
+      else Seq((s, l))
+    }
     if (!fs.exists(p)) Seq.empty
-    else fs.listStatus(p).toSeq.flatMap(walk).sorted
+    else fs.listStatus(p).toSeq.flatMap(walk(_, listed = true))
+      .sortBy(_._1.getPath.toString)
+  }
+
+  /** Whether Spark's file index skips an entry of this name (the rule
+    * of Spark's `HadoopFSUtils.shouldFilterOutPathName`, which is not
+    * public API).
+    */
+  private def hidden(name: String): Boolean =
+    ((name.startsWith("_") && !name.contains("=")) || name.startsWith(".") ||
+      name.endsWith("._COPYING_")) &&
+      !(name.startsWith("_common_metadata") || name.startsWith("_metadata"))
+
+  private val SummaryFiles = Set(
+    ParquetFileWriter.PARQUET_COMMON_METADATA_FILE,
+    ParquetFileWriter.PARQUET_METADATA_FILE)
+
+  /** The data schema Spark's inference would return for the listed
+    * `files` (sorted by path), read on the driver; None where
+    * [[parquet]] falls back to Spark's own inference.
+    */
+  private def footerSchema(spark: SparkSession, conf: Configuration,
+                           files: Seq[FileStatus]): Option[StructType] = {
+    val sql = spark.sessionState.conf
+    def named(n: String) = files.find(_.getPath.getName == n)
+    val data = files.filterNot(f => SummaryFiles(f.getPath.getName))
+    if (sql.isParquetSchemaMergingEnabled || data.isEmpty) None
+    else {
+      val file = named(ParquetFileWriter.PARQUET_COMMON_METADATA_FILE)
+        .orElse(named(ParquetFileWriter.PARQUET_METADATA_FILE))
+        .getOrElse(data.head)
+      val converter = new ParquetToSparkSchemaConverter(
+        assumeBinaryIsString = sql.isParquetBinaryAsString,
+        assumeInt96IsTimestamp = sql.isParquetINT96AsTimestamp,
+        inferTimestampNTZ = sql.parquetInferTimestampNTZEnabled,
+        nanosAsLong = sql.legacyParquetNanosAsLong,
+        respectUnknownTypeAnnotation =
+          sql.parquetReaderRespectUnknownTypeAnnotation)
+      try {
+        val footer = ParquetFooterReader.readFooter(
+          HadoopInputFile.fromStatus(file, conf),
+          ParquetMetadataConverter.SKIP_ROW_GROUPS)
+        Some(ParquetFileFormat.readSchemaFromFooter(
+          new Footer(file.getPath, footer), converter))
+      } catch {
+        case NonFatal(_) => None // Spark's own inference decides
+      }
+    }
   }
 
   /** The `ts` normalization alone, for callers that build their own
