@@ -39,12 +39,23 @@ import org.apache.spark.sql.SparkSession
   *    binds only if this session is built before the JVM's first
   *    `file://` access (Hadoop caches one `FileSystem` per scheme,
   *    whatever class a later conf names), as every main here does.
+  *  - one AQE rule, [[graft.ops.SingleTaskSort]]: a global sort whose
+  *    input AQE would coalesce to one partition anyway sorts in one
+  *    task, without the range-sampling job and the shuffle map stage
+  *    (two of a small query's ~4.6 jobs). Safe because it fires only
+  *    where AQE's own coalescing would leave exactly that one sorted
+  *    partition, so rows and order are unchanged; it reads the
+  *    threshold from AQE's own coalescing confs (off with coalescing,
+  *    `minPartitionSize` or `advisoryPartitionSizeInBytes`), and keeps
+  *    the range exchange over any operator whose output can outgrow
+  *    Spark's size estimate (a `Generate` fan-out, a typed lambda).
   *
   * Deliberately NOT set here: `spark.sql.shuffle.partitions` (a
   * cluster sizes its own; [[localBuilder]] sets it to the local core
   * count so tiny-fixture runs are comparable), memory/executor sizing
-  * (deployment-owned), and anything plan-shaping (AQE stays at Spark
-  * defaults — the engine's operators are audited under them).
+  * (deployment-owned), and any other plan-shaping conf (AQE's confs
+  * stay at Spark defaults — the engine's operators are audited under
+  * them).
   */
 object Sessions {
 
@@ -60,6 +71,7 @@ object Sessions {
     .config("spark.hadoop.fs.file.impl", "graft.ops.NioLocalFileSystem")
     .config("spark.hadoop.fs.AbstractFileSystem.file.impl",
       "graft.ops.NioLocalFs")
+    .withExtensions(_.injectQueryStagePrepRule(_ => graft.ops.SingleTaskSort))
 
   /** The harness shape: `local[cpus]` with shuffle parallelism pinned
     * to the core count (scale-adaptive — the driver re-runs the bench

@@ -1589,11 +1589,12 @@ object DupGraph {
       isegs.size <= 1 && psegs.size <= 1 && clsegs.size <= 1
     if (keepPairs && compactAlready) return
     // keepPairs=false on an already-compact artifact: re-run only if
-    // there are still pairs to prune (one cheap limit-1 probe on the
-    // single pairs segment) — a scheduled periodic prune must not pay
-    // a full corpus rewrite for zero effect every time
+    // there are still pairs to prune (the single pairs segment's footer
+    // row counts, read on the driver: no Spark job) — a scheduled
+    // periodic prune must not pay a full corpus rewrite for zero effect
+    // every time
     if (!keepPairs && compactAlready && psegs.nonEmpty &&
-      Tables.parquet(spark, segDir(path, psegs.head)).isEmpty) return
+      Tables.rowCount(spark, segDir(path, psegs.head)) == 0) return
     val buckets = mf.get("buckets").map(_.toInt).getOrElse(0)
     val (dir, v) = graft.ops.Staging.nextVersionDir(path, store)
     val index = isegs.map(sid => Tables.parquet(spark, segDir(path, sid)))

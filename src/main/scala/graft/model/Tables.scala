@@ -11,6 +11,7 @@ import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat,
 import org.apache.spark.sql.functions.{col, expr}
 import org.apache.spark.sql.types._
 
+import scala.jdk.CollectionConverters._
 import scala.util.control.NonFatal
 
 /** Catalog of the driver testdata tables (TESTDATA.md / FIXTURES.md §1) and
@@ -117,6 +118,22 @@ object Tables {
         memos.synchronized(memo.put(key, df.schema))
         df
     }
+  }
+
+  /** Rows in the Parquet file or directory at `path`: the row counts of
+    * the footers of the files Spark's file index would read (see
+    * [[parquet]]), summed on the driver — the answer of a `count()`
+    * without its Spark job. 0 when `path` is absent; throws on an
+    * unreadable footer.
+    */
+  def rowCount(spark: SparkSession, path: String): Long = {
+    val conf = spark.sessionState.newHadoopConf()
+    listing(conf, path).collect {
+      case (f, true) if !SummaryFiles(f.getPath.getName) =>
+        ParquetFooterReader.readFooter(HadoopInputFile.fromStatus(f, conf),
+          ParquetMetadataConverter.NO_FILTER).getBlocks.asScala
+          .map(_.getRowCount).sum
+    }.sum
   }
 
   /** Session confs that change what Parquet schema inference returns

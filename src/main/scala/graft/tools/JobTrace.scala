@@ -1,55 +1,58 @@
 package graft.tools
 
-import scala.collection.concurrent.TrieMap
-
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd,
-  SparkListenerJobStart}
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.JobCounter
+import org.apache.spark.scheduler.SparkListenerJobStart
 
 import graft.SparkEntry
 
 /** Scratch: per-JOB attribution for one query — job id, wall seconds,
-  * and the call site / description Spark recorded, so a 58-job
-  * lifecycle row can be read as "which statement launched which jobs"
-  * (QueryJobs gives the count; this names the jobs).
+  * and the call site Spark recorded, so a 58-job lifecycle row can be
+  * read as "which statement launched which jobs" (QueryJobs gives the
+  * count; this names the jobs).
+  *
+  * Each query's result goes in full to the `noop` sink (a `.count()`
+  * would drop its final Sort, and with it the sort's jobs). Its jobs
+  * are the ones carrying its job tag ([[JobCounter.jobs]]), read after
+  * the listener bus drains, so a late job-end event is never credited
+  * to the next query.
   *
   * Usage: runMain graft.tools.JobTrace SF_DIR q_name [q_name ...]
-  * (first run of each name is cold; pass a name twice for warm)
+  * (first run of each name is cold; pass a name twice for warm;
+  * `SPARK_GRAFT_CPUS` sets the core count, default 32)
   */
 object JobTrace {
   def main(args: Array[String]): Unit = {
     val d = args.head
     val names = args.tail
-    val spark = graft.Sessions.localBuilder("32").getOrCreate()
+    val spark = graft.Sessions.localBuilder(
+      sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")).getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
-    val starts = TrieMap.empty[Int, (Long, String)]
-    val lines = new java.util.concurrent.ConcurrentLinkedQueue[String]
-    spark.sparkContext.addSparkListener(new SparkListener {
-      override def onJobStart(j: SparkListenerJobStart): Unit = {
-        // the deepest graft frame in the root stage's call stack names
-        // the engine statement that launched the job
-        val frames = j.stageInfos.lastOption.map(_.details).getOrElse("")
-          .split('\n').filter(_.contains("graft."))
-        val site = frames.take(3).map(_.trim
-          .replaceAll("^at ", "").replaceAll("\\(.*\\)$", "")).mkString(" <- ")
-        val nTasks = j.stageInfos.map(_.numTasks).sum
-        starts.put(j.jobId, (System.nanoTime(),
-          s"stages=${j.stageInfos.size} tasks=$nTasks  $site"))
-      }
-      override def onJobEnd(j: SparkListenerJobEnd): Unit =
-        starts.remove(j.jobId).foreach { case (t0, site) =>
-          lines.add(f"[job] ${j.jobId}%4d ${(System.nanoTime() - t0) / 1e9}%7.3f s  $site")
-        }
-    })
     names.foreach { n =>
-      lines.clear()
       val t0 = System.nanoTime()
-      val rows = SparkEntry.queries(n)(spark, d).count()
+      val (_, jobs) = JobCounter.jobs(spark.sparkContext)(
+        SparkEntry.queries(n)(spark, d).write.format("noop")
+          .mode("overwrite").save())
       val wall = (System.nanoTime() - t0) / 1e9
-      Thread.sleep(400) // drain listener bus
-      println(s"==== $n wall ${f"$wall%.2f"} s ($rows rows) ====")
-      lines.forEach(l => println(l))
+      println(f"==== $n wall $wall%.2f s (${jobs.size} jobs) ====")
+      jobs.foreach { case JobCounter.Job(s, end) =>
+        println(f"[job] ${s.jobId}%4d ${end.fold("    -   ")(e =>
+          f"${(e.time - s.time) / 1e3}%7.3f")} s  ${site(s)}")
+      }
     }
     spark.stop()
+  }
+
+  /** Stage and task counts, the call site Spark recorded (the name of
+    * the job's first stage), and the deepest graft frames of the root
+    * stage's call stack (the engine statement that launched the job).
+    */
+  private def site(s: SparkListenerJobStart): String = {
+    val frames = s.stageInfos.lastOption.map(_.details).getOrElse("")
+      .split('\n').filter(_.contains("graft."))
+    val graftSite = frames.take(3).map(_.trim
+      .replaceAll("^at ", "").replaceAll("\\(.*\\)$", "")).mkString(" <- ")
+    val short = s.stageInfos.minByOption(_.stageId).fold("")(_.name)
+    s"stages=${s.stageInfos.size} tasks=${s.stageInfos.map(_.numTasks).sum}" +
+      s"  $short  $graftSite"
   }
 }

@@ -8,7 +8,8 @@ import org.apache.spark.sql.classic.ExpressionUtils
   * Spark 4 moved the Expression-backed Column constructor behind
   * `private[sql]` converters (`classic.ExpressionUtils`); extension
   * libraries reach them from inside the `org.apache.spark.sql`
-  * package. This is the only file outside the `graft` namespace.
+  * package. The one other file outside the `graft` namespace is
+  * `org.apache.spark.JobCounter`, for the same reason.
   */
 object GraftBridge {
   def column(e: Expression): Column = ExpressionUtils.column(e)

@@ -900,6 +900,22 @@ class DedupSpec extends SparkSpec {
     } finally fullAll.unpersist()
   }
 
+  test("prune on a compact artifact: pairs are pruned once; a repeat " +
+      "prune reads the empty pairs segment's footers and launches no job") {
+    val dir = java.nio.file.Files.createTempDirectory("dupgraph_prune").toString
+    val g1 = Dedup.dupGraph(day1Docs.toDF("doc_id", "text"),
+      col("text"), col("doc_id"))
+    try g1.write(dir) finally g1.unpersist()
+    assert(!DupGraph.read(spark, dir).pairs.isEmpty)
+    DupGraph.compact(spark, dir, keepPairs = false) // v1 is compact, pairs not
+    assert(graft.ops.Staging.currentVersion(dir).contains(2L))
+    assert(DupGraph.read(spark, dir).pairs.isEmpty)
+    val jobs = org.apache.spark.JobCounter.count(spark.sparkContext)(
+      DupGraph.compact(spark, dir, keepPairs = false))
+    assert(jobs == 0, s"$jobs jobs")
+    assert(graft.ops.Staging.currentVersion(dir).contains(2L))
+  }
+
   test("empty-delta commit: a micro-batch contributing zero shingles " +
       "never bricks the stored artifact (empty bucketed segments are " +
       "written schema-bearing)") {

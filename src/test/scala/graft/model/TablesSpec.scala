@@ -200,6 +200,12 @@ class TablesSpec extends SparkSpec {
       annSegs.map(seg => s"$dir/ann/segments/$seg")
     segments.foreach { seg =>
       assert(assertInfersLikeSpark(s, seg, seg).isDefined, s"$seg unreadable")
+      var rows = -1L
+      val jobs = JobCounter.count(s.sparkContext) {
+        rows = Tables.rowCount(s, seg)
+      }
+      assert(rows == s.read.parquet(seg).count() && jobs == 0,
+        s"$seg: rowCount $rows with $jobs job(s)")
     }
     assert(Tables.parquet(s, code).columns.contains("icell"),
       "the partition column is discovered on the miss path")
@@ -257,6 +263,10 @@ class TablesSpec extends SparkSpec {
     assert(cols("metadata") == Some(Seq("id", "m")))
     assert(cols("hidden") == Some(Seq("id", "v")))
     assert(cols("eq") == Some(Seq("e", "_k")))
+    // rowCount reads the same files: summaries and hidden entries never
+    Seq("summaries", "metadata", "hidden", "eq").foreach { d =>
+      assert(Tables.rowCount(s, s"$dir/$d") == s.read.parquet(s"$dir/$d").count(), d)
+    }
   }
 
   test("a missing path, a _SUCCESS-only dir and a corrupt footer throw " +
