@@ -39,16 +39,22 @@ import org.apache.spark.sql.SparkSession
   *    binds only if this session is built before the JVM's first
   *    `file://` access (Hadoop caches one `FileSystem` per scheme,
   *    whatever class a later conf names), as every main here does.
-  *  - one AQE rule, [[graft.ops.SingleTaskSort]]: a global sort whose
-  *    input AQE would coalesce to one partition anyway sorts in one
-  *    task, without the range-sampling job and the shuffle map stage
-  *    (two of a small query's ~4.6 jobs). Safe because it fires only
-  *    where AQE's own coalescing would leave exactly that one sorted
-  *    partition, so rows and order are unchanged; it reads the
-  *    threshold from AQE's own coalescing confs (off with coalescing,
-  *    `minPartitionSize` or `advisoryPartitionSizeInBytes`), and keeps
-  *    the range exchange over any operator whose output can outgrow
-  *    Spark's size estimate (a `Generate` fan-out, a typed lambda).
+  *  - one AQE rule, [[graft.ops.SmallPlan]]: a query whose input AQE
+  *    would coalesce to one partition anyway runs in one task. It
+  *    replaces a small exchange with `Coalesce(1)` under a global sort
+  *    (no range-sampling job, no map stage), under an aggregate or a
+  *    window (no map stage), on both sides of a shuffled join (together
+  *    or not at all), and turns a broadcast hash join over a small
+  *    build side into a one-task shuffled hash join (no broadcast job).
+  *    Safe because one partition satisfies every distribution those
+  *    operators require, the local sorts stay, and it fires only where
+  *    AQE's own coalescing would have left exactly that one partition:
+  *    the threshold comes from AQE's coalescing confs (off with
+  *    coalescing, `minPartitionSize` or `advisoryPartitionSizeInBytes`),
+  *    and the exchange stays over any operator whose output can outgrow
+  *    Spark's size estimate (a `Generate` fan-out, a typed lambda), a
+  *    user's `repartition`, an exchange AQE would reuse, a null-aware
+  *    anti join and a broadcast a partition-pruning filter reuses.
   *
   * Deliberately NOT set here: `spark.sql.shuffle.partitions` (a
   * cluster sizes its own; [[localBuilder]] sets it to the local core
@@ -71,7 +77,7 @@ object Sessions {
     .config("spark.hadoop.fs.file.impl", "graft.ops.NioLocalFileSystem")
     .config("spark.hadoop.fs.AbstractFileSystem.file.impl",
       "graft.ops.NioLocalFs")
-    .withExtensions(_.injectQueryStagePrepRule(_ => graft.ops.SingleTaskSort))
+    .withExtensions(_.injectQueryStagePrepRule(_ => graft.ops.SmallPlan))
 
   /** The harness shape: `local[cpus]` with shuffle parallelism pinned
     * to the core count (scale-adaptive — the driver re-runs the bench

@@ -23,6 +23,12 @@ object JobCounter {
 
   def count(sc: SparkContext)(body: => Any): Int = jobs(sc)(body)._2.size
 
+  /** Whether the job's final stage is a shuffle map stage, i.e. the job
+    * only materializes a shuffle (AQE submits one per query stage).
+    */
+  def mapStage(s: SparkListenerJobStart): Boolean =
+    s.stageInfos.maxByOption(_.stageId).exists(_.shuffleDepId.isDefined)
+
   /** The block's result and its jobs, in job-id order. */
   def jobs[A](sc: SparkContext)(body: => A): (A, Seq[Job]) = {
     val tag = s"jobcount-${java.util.UUID.randomUUID}"

@@ -15,6 +15,12 @@ class PlanAuditSpec extends SparkSpec {
   private def planOf(name: String): String =
     SparkEntry.queries(name)(spark, d).queryExecution.executedPlan.toString
 
+  private def scalePlanOf(name: String): String = atScale(planOf(name))
+
+  /** No shuffle or broadcast exchange left: the one-task shape. */
+  private def oneTask(p: String): Boolean =
+    !p.contains("Exchange") && p.contains("Coalesce 1")
+
   test("q_scan_prune: column pruning reaches the parquet reader") {
     val p = planOf("q_scan_prune")
     assert(p.contains("ReadSchema"))
@@ -35,12 +41,18 @@ class PlanAuditSpec extends SparkSpec {
   }
 
   test("q_join_broadcast: literal key batch is broadcast") {
-    assert(planOf("q_join_broadcast").contains("BroadcastHashJoin"))
+    assert(scalePlanOf("q_join_broadcast").contains("BroadcastHashJoin"))
+    val small = planOf("q_join_broadcast")
+    assert(oneTask(small) && small.contains("ShuffledHashJoin"), small)
   }
 
   test("q_join_star: dimension lookups broadcast, no sort-merge cascade") {
-    val p = planOf("q_join_star")
+    val p = scalePlanOf("q_join_star")
     assert(p.contains("BroadcastHashJoin"))
+    // small: the four dimension joins run in the one task of the scan
+    val small = planOf("q_join_star")
+    assert(!small.contains("Broadcast") && !small.contains("SortMergeJoin") &&
+      "ShuffledHashJoin".r.findAllIn(small).size == 4, small)
   }
 
   test("q_ngram_jaccard: self-join reuses one exchange over the index") {
@@ -97,10 +109,12 @@ class PlanAuditSpec extends SparkSpec {
   }
 
   test("q_pack_sequences: exactly one hash shuffle (the shard repartition)") {
-    val p = planOf("q_pack_sequences")
+    val p = scalePlanOf("q_pack_sequences")
     val hashEx = p.linesIterator.count(l =>
       l.contains("Exchange hashpartitioning"))
     assert(hashEx == 1, s"packing should shuffle once on the shard key:\n$p")
+    val small = planOf("q_pack_sequences")
+    assert(oneTask(small), small)
   }
 
   test("q_decontaminate: eval shingle set broadcast, corpus scanned once") {
@@ -210,8 +224,10 @@ class PlanAuditSpec extends SparkSpec {
   }
 
   test("entry: flagship query broadcasts the customer dim") {
-    val p = SparkEntry.entry(spark).queryExecution.executedPlan.toString
+    val p = atScale(SparkEntry.entry(spark).queryExecution.executedPlan.toString)
     assert(p.contains("BroadcastHashJoin"))
+    val small = SparkEntry.entry(spark).queryExecution.executedPlan.toString
+    assert(!small.contains("Broadcast") && small.contains("ShuffledHashJoin"), small)
   }
 
   test("q_asof_join / q_asof_forward: union-sort shape — window over one key exchange, no join node") {
@@ -234,7 +250,7 @@ class PlanAuditSpec extends SparkSpec {
   }
 
   test("q_inverted_index: one token exchange — df filter precedes collect") {
-    val p = planOf("q_inverted_index")
+    val p = scalePlanOf("q_inverted_index")
     // the only join is the one-row broadcast of the corpus size (the
     // TF-IDF scalar pattern) — never a row-level shuffle join
     assert(!p.contains("SortMergeJoin") && !p.contains("ShuffledHashJoin"), p)
@@ -248,6 +264,11 @@ class PlanAuditSpec extends SparkSpec {
     // side plan, not the token stream).
     assert("Exchange hashpartitioning\\(token".r.findAllIn(p).size == 1, p)
     assert("Exchange hashpartitioning".r.findAllIn(p).size == 2, p)
+    // small: the doc_id count runs in one task; the token exchange
+    // stays, since the tokens are a fan-out of the documents
+    val small = planOf("q_inverted_index")
+    assert("Exchange hashpartitioning".r.findAllIn(small).size == 1 &&
+      "Exchange hashpartitioning\\(token".r.findAllIn(small).size == 1, small)
   }
 
   test("q_minhash_lsh_bounded: bucket-size window rides the band-key exchange") {
@@ -278,29 +299,39 @@ class PlanAuditSpec extends SparkSpec {
   }
 
   test("q_window_lag: all navigation functions share ONE Window exec / exchange") {
-    val p = planOf("q_window_lag")
+    val p = scalePlanOf("q_window_lag")
     assert("(?m)^\\s*[+:]?-? *Window ".r.findAllIn(p).size <= 2, p) // ntile needs n-of-partition: 1 extra pass max
     assert("hashpartitioning\\(o_custkey".r.findAllIn(p).size == 1, p)
+    val small = planOf("q_window_lag")
+    assert(oneTask(small), small)
   }
 
   test("q_window_range: RANGE frame runs in the window exec, single key exchange") {
-    val p = planOf("q_window_range")
+    val p = scalePlanOf("q_window_range")
     assert(p.contains("Window"), p)
     assert("hashpartitioning\\(o_custkey".r.findAllIn(p).size == 1, p)
+    val small = planOf("q_window_range")
+    assert(oneTask(small), small)
   }
 
   test("q_grouping_sets: one Expand + hash aggregate, dims broadcast — no per-set rescan") {
-    val p = planOf("q_grouping_sets")
+    val p = scalePlanOf("q_grouping_sets")
     assert("Expand".r.findAllIn(p).size == 1, p)
     assert("BroadcastHashJoin".r.findAllIn(p).size == 2, p)
     // a per-set rescan would show one parquet scan of customer per set
     assert("Scan parquet".r.findAllIn(p).size == 3, p)
+    val small = planOf("q_grouping_sets")
+    assert("Expand".r.findAllIn(small).size == 1 && !small.contains("Broadcast") &&
+      "ShuffledHashJoin".r.findAllIn(small).size == 2 &&
+      "Scan parquet".r.findAllIn(small).size == 3, small)
   }
 
   test("q_scd2: collapse + versioning share one exchange, no join") {
-    val p = planOf("q_scd2")
+    val p = scalePlanOf("q_scd2")
     assert(!p.contains("Join"), p)
     assert("hashpartitioning\\(user_id".r.findAllIn(p).size == 1, p)
+    val small = planOf("q_scd2")
+    assert(oneTask(small), small)
   }
 
   test("q_table_diff: ONE key-partitioned join, neither snapshot collected") {
@@ -353,14 +384,23 @@ class PlanAuditSpec extends SparkSpec {
     // globalNtile shape: range-partitioned data, per-pid parallel windows,
     // the prefix-sum side table riding the SAME exchange (reused), and
     // the builtin single-partition ntile nowhere in the plan
-    val df = SparkEntry.queries("q_histogram_eq")(spark, d)
-    df.collect() // exchange reuse is an AQE runtime decision
-    val p = df.queryExecution.executedPlan.toString
+    def executed(): String = {
+      val df = SparkEntry.queries("q_histogram_eq")(spark, d)
+      df.collect() // exchange reuse is an AQE runtime decision
+      df.queryExecution.executedPlan.toString
+    }
+    val p = atScale(executed())
     assert(p.contains("rangepartitioning"), p)
     assert(!p.toLowerCase.contains("ntile"), p)
     assert(p.contains("ReusedExchange") || p.contains("reused"), p)
     assert(p.contains("BroadcastHashJoin"), p)
     assert(!p.contains("CartesianProduct"), p)
+    // small: the same range exchange, still reused; the prefix-sum
+    // side table joins in one task
+    val small = executed()
+    assert(small.contains("rangepartitioning") && !small.toLowerCase.contains("ntile") &&
+      small.contains("ReusedExchange") && small.contains("ShuffledHashJoin") &&
+      !small.contains("Broadcast"), small)
   }
 
   test("q_streaks: island key from one ranking window, no self-join") {
@@ -377,9 +417,11 @@ class PlanAuditSpec extends SparkSpec {
   }
 
   test("q_moving_zscore: both moment sums share one Window exec and key exchange") {
-    val p = planOf("q_moving_zscore")
+    val p = scalePlanOf("q_moving_zscore")
     assert("(?m)^\\s*[+:]?-? *Window ".r.findAllIn(p).size == 1, p)
     assert("hashpartitioning\\(user_id".r.findAllIn(p).size == 1, p)
+    val small = planOf("q_moving_zscore")
+    assert(oneTask(small), small)
   }
 
   test("q_cohort_retention: two-aggregate shape over the user exchange") {
@@ -421,9 +463,11 @@ class PlanAuditSpec extends SparkSpec {
   }
 
   test("q_corpus_mix: rate table joins broadcast, never sort-merge") {
-    val p = planOf("q_corpus_mix")
+    val p = scalePlanOf("q_corpus_mix")
     assert(p.contains("BroadcastHashJoin"), p)
     assert(!p.contains("SortMergeJoin"), "bounded rate table must broadcast")
+    val small = planOf("q_corpus_mix")
+    assert(oneTask(small) && small.contains("ShuffledHashJoin"), small)
   }
 
   test("q_quality_cut: 1-row threshold broadcast back over the corpus") {
@@ -573,8 +617,10 @@ class PlanAuditSpec extends SparkSpec {
   }
 
   test("q_score_percentile: domain-bounded CDF broadcasts back over the corpus") {
-    val p = planOf("q_score_percentile")
+    val p = scalePlanOf("q_score_percentile")
     assert(p.contains("BroadcastHashJoin"), p)
+    val small = planOf("q_score_percentile")
+    assert(oneTask(small) && small.contains("ShuffledHashJoin"), small)
   }
 
   test("q_gaps: both lags fuse into ONE window exec") {
@@ -596,10 +642,14 @@ class PlanAuditSpec extends SparkSpec {
   }
 
   test("q_temperature_mix: rate table broadcasts, corpus never shuffle-joins") {
-    val p = planOf("q_temperature_mix")
+    val p = scalePlanOf("q_temperature_mix")
     assert(p.contains("BroadcastHashJoin"), p)
     assert(!p.contains("SortMergeJoin") && !p.contains("ShuffledHashJoin"), p)
     assert(!p.contains("CartesianProduct"), p)
+    // small: the rate table joins in the corpus scan's one task
+    val small = planOf("q_temperature_mix")
+    assert(small.contains("ShuffledHashJoin") && !small.contains("BroadcastHashJoin") &&
+      !small.contains("SortMergeJoin") && !small.contains("CartesianProduct"), small)
   }
 
   test("q_weighted_median: cumulative windows run over the histogram aggregate") {
@@ -628,10 +678,14 @@ class PlanAuditSpec extends SparkSpec {
   }
 
   test("q_source_drift: per-group totals broadcast back, no corpus shuffle-join") {
-    val p = planOf("q_source_drift")
+    val p = scalePlanOf("q_source_drift")
     assert(p.contains("BroadcastHashJoin"), p)
     assert(!p.contains("SortMergeJoin") && !p.contains("ShuffledHashJoin"), p)
     assert(!p.contains("CartesianProduct"), p)
+    // small: the totals join in one task over the shared (reused) exchange
+    val small = planOf("q_source_drift")
+    assert(small.contains("ShuffledHashJoin") && !small.contains("Broadcast") &&
+      !small.contains("SortMergeJoin") && !small.contains("CartesianProduct"), small)
   }
 
   test("q_kmeans: centroids broadcast each pass, argmax is a group limit, " +
@@ -887,10 +941,15 @@ class PlanAuditSpec extends SparkSpec {
 
   test("q_score_norm / q_token_budget_cut: CDF/threshold broadcast back, never a corpus sort-merge") {
     for (n <- Seq("q_score_norm", "q_token_budget_cut")) {
-      val p = planOf(n)
+      val p = scalePlanOf(n)
       assert(p.contains("BroadcastHashJoin") || p.contains("BroadcastNestedLoopJoin"),
         s"$n lost the broadcast-back:\n$p")
       assert(!p.contains("SortMergeJoin"), s"$n must not sort-merge the corpus:\n$p")
+      // small: the CDF joins back in one task (q_score_norm); the
+      // threshold of q_token_budget_cut stays a nested-loop broadcast
+      val small = planOf(n)
+      assert(!small.contains("SortMergeJoin") && (small.contains("ShuffledHashJoin") ||
+        small.contains("BroadcastNestedLoopJoin")), s"$n:\n$small")
     }
   }
 }

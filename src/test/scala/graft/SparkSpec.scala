@@ -12,6 +12,18 @@ trait SparkSpec extends AnyFunSuite {
   // eager: the session must exist before a spec's first `file://`
   // access, since Hadoop caches the first class that scheme resolves to
   val spark: SparkSession = SparkSpec.session
+
+  /** `body` with AQE partition coalescing off: the documented off-switch
+    * of [[graft.ops.SmallPlan]], which leaves Spark's initial plan as it
+    * is. On test-sized inputs every exchange is small enough for that
+    * rule to run a query in one task, so an audit of the plan a large
+    * input gets reads it here.
+    */
+  def atScale[A](body: => A): A = {
+    val key = "spark.sql.adaptive.coalescePartitions.enabled"
+    spark.conf.set(key, "false")
+    try body finally spark.conf.unset(key)
+  }
 }
 
 object SparkSpec {

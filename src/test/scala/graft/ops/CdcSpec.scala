@@ -92,11 +92,16 @@ class CdcSpec extends SparkSpec {
   }
 
   test("scdType2 plan: collapse + versioning share one exchange and sort") {
-    val p = Cdc.scdType2(feed, Seq("id"), "ts",
+    def plan() = Cdc.scdType2(feed, Seq("id"), "ts",
       order = Seq("ts", "seq"), tracked = Seq("tier"))
       .queryExecution.executedPlan.toString
+    val p = atScale(plan())
     assert(p.sliding("hashpartitioning".length).count(_ == "hashpartitioning") >= 1)
     assert(!p.contains("SortMergeJoin") && !p.contains("BroadcastHashJoin"), p)
+    // small input: the same shape in one task, without the key exchange
+    val small = plan()
+    assert(!small.contains("hashpartitioning") && !small.contains("SortMergeJoin") &&
+      !small.contains("HashJoin"), small)
   }
 
   // ---------------------------------------------------------- snapshot diff

@@ -65,10 +65,14 @@ class RelationalSpec extends SparkSpec {
 
   test("literalKeyJoin constrains by the key batch and plans a broadcast") {
     val keys = Seq((2, "x")).toDF("id", "w").select("id")
-    val out = Relational.literalKeyJoin(left, keys, Seq("id"))
+    def join() = Relational.literalKeyJoin(left, keys, Seq("id"))
+    val out = join()
     assert(out.as[(Int, String)].collect().toSet == Set((2, "b")))
-    val plan = out.queryExecution.executedPlan.toString
+    val plan = atScale(join().queryExecution.executedPlan.toString)
     assert(plan.contains("BroadcastHashJoin") || plan.contains("BroadcastNestedLoopJoin"),
       s"expected broadcast join in plan:\n$plan")
+    // small input: the key batch joins in one task, with no broadcast
+    val small = out.queryExecution.executedPlan.toString
+    assert(small.contains("ShuffledHashJoin") && !small.contains("Exchange"), small)
   }
 }

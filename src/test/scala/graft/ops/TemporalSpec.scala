@@ -144,17 +144,25 @@ class TemporalSpec extends SparkSpec {
   }
 
   test("nearest as-of: plan keeps one key exchange (both carries share it)") {
-    val p = Temporal.asofJoinNearest(left, right, Seq("k"), "ts", "rts")
+    def plan() = Temporal.asofJoinNearest(left, right, Seq("k"), "ts", "rts")
       .queryExecution.executedPlan.toString
+    val p = atScale(plan())
     assert(!p.contains("Join"), p)
     assert("hashpartitioning".r.findAllIn(p).size == 1, p)
+    // small input: the same shape in one task, with no exchange at all
+    val small = plan()
+    assert(!small.contains("Join") && !small.contains("Exchange"), small)
   }
 
   test("plan: single exchange on the key, no join node (union-sort shape)") {
-    val p = Temporal.asofJoinBackward(left, right, Seq("k"), "ts", "rts")
+    def plan() = Temporal.asofJoinBackward(left, right, Seq("k"), "ts", "rts")
       .queryExecution.executedPlan.toString
+    val p = atScale(plan())
     assert(!p.contains("Join"), p)
     assert("hashpartitioning".r.findAllIn(p).size == 1, p)
+    // small input: the same shape in one task, with no exchange at all
+    val small = plan()
+    assert(!small.contains("Join") && !small.contains("Exchange"), small)
   }
 
   // --------------------------------------------------- resample + ffill
