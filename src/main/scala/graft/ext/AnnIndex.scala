@@ -3,7 +3,7 @@ package graft.ext
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.ops.Windows
+import graft.ops.{Segments, Windows}
 import graft.model.Tables
 
 /** Durable IVF-PQ ANN index — the production lifecycle around
@@ -171,60 +171,30 @@ final class AnnIndex private[ext] (
             retain: Int = 1,
             store: graft.ops.PointerStore =
               graft.ops.PointerStore.File): AnnIndex = {
-    val spark = centroids.sparkSession
-    val (dir, v) = graft.ops.Staging.nextVersionDir(path, store)
+    import AnnIndex.{Cent, Codes, Pq}
     val lin = lineage.filter(_.root == path)
-    // STALE-HANDLE GUARD: a lineage-rooted commit re-REFERENCES stored
-    // segments instead of rewriting them, so a handle held across more
-    // commits than the writers' retention (the artifact retrained or
-    // compacted past this reader's window) could otherwise publish a
-    // manifest pointing at already-swept files — a loudly-failing read
-    // path today, but a BRICKED pointer after the swap. Refuse BEFORE
-    // any write: the check is O(segments) metadata.
-    lin.foreach { l =>
-      val refs = l.csegs ++ l.centSeg ++ l.pqSeg
-      val missing = refs.filterNot(sid =>
-        graft.ops.Staging.exists(AnnIndex.segDir(path, sid)))
-      require(missing.isEmpty,
-        s"AnnIndex.write: this handle references segments " +
-          s"[${missing.mkString(", ")}] that no longer exist at $path — " +
-          "the artifact was retrained/compacted past this reader's " +
-          "retention window. Re-read the index and re-apply the batch.")
-    }
-    val catalogsStored = lin.flatMap(l => l.centSeg.zip(l.pqSeg))
+    // a lineage-rooted commit re-REFERENCES stored segments instead of
+    // rewriting them, catalogs included: the stale-handle guard covers all
+    val c = Segments.begin(AnnIndex.Artifact, path, store,
+      lin.toSeq.flatMap(l => l.csegs ++ l.centSeg ++ l.pqSeg))
     // one concurrent batch for everything this commit must put on
     // disk: the code segment plus (fresh-train generations only) the
     // two catalog segments — they share only immutable lazy-checkpoint
     // inputs, and the ladder's fixed latency is the streaming
     // ingest-frequency bound
-    val codeJob: () => Unit = lin match {
-      case Some(l) if l.deltas.nonEmpty => () =>
-        AnnIndex.writeCodeSegment(
-          l.deltas.map(_()).reduce(_.unionByName(_)), path, s"c$v")
-      case Some(_) => () => ()
-      case None => () => AnnIndex.writeCodeSegment(codes, path, s"c$v")
-    }
-    val catJobs: Seq[() => Unit] =
-      if (catalogsStored.isDefined) Seq.empty // frozen: reuse, no jobs
-      else Seq(
-        () => AnnIndex.writeCatalogSegment(centroids, path, s"n$v"),
-        () => AnnIndex.writeCatalogSegment(pqCent, path, s"b$v"))
-    AnnIndex.parJobs(codeJob +: catJobs: _*)
     val csegs = lin match {
-      case Some(l) if l.deltas.nonEmpty => l.csegs :+ s"c$v"
-      case Some(l) => l.csegs
-      case None => Seq(s"c$v")
+      case Some(l) if l.deltas.isEmpty => l.csegs
+      case Some(l) => l.csegs :+ c.add(Codes, l.deltas.map(_()).reduce(_.unionByName(_)))
+      case None => Seq(c.add(Codes, codes))
     }
-    val (centSeg, pqSeg) = catalogsStored.getOrElse((s"n$v", s"b$v"))
-    graft.ops.Staging.writeManifest(dir,
-      Map("m" -> m.toString, "subDim" -> subDim.toString,
-        "fmt" -> AnnIndex.FormatVersion, "csegs" -> csegs.mkString(","),
-        "centseg" -> centSeg, "pqseg" -> pqSeg) ++
-        batchId.map("batchId" -> _.toString))
-    graft.ops.Staging.commitVersion(path, v, retain, store)
-    graft.ops.Staging.gcSegments(path, AnnIndex.SegKeys, store = store)
+    val (centSeg, pqSeg) = lin.flatMap(l => l.centSeg.zip(l.pqSeg)) // frozen: reuse
+      .getOrElse((c.add(Cent, centroids), c.add(Pq, pqCent)))
+    c.publish(Map("m" -> m.toString, "subDim" -> subDim.toString,
+      "fmt" -> AnnIndex.FormatVersion, "csegs" -> csegs.mkString(","),
+      "centseg" -> centSeg, "pqseg" -> pqSeg) ++
+      batchId.map("batchId" -> _.toString), retain)
     new AnnIndex(centroids, pqCent,
-      () => csegs.map(sid => AnnIndex.openCodeSegment(spark, path, sid)),
+      () => csegs.map(sid => AnnIndex.openCodes(centroids.sparkSession, path, sid)),
       m, subDim,
       lineage = Some(AnnIndex.Lineage(path, csegs, Some(centSeg),
         Some(pqSeg), deltas = Seq.empty)))
@@ -245,64 +215,24 @@ object AnnIndex {
                                         pqSeg: Option[String],
                                         deltas: Seq[() => DataFrame])
 
-  /** Every manifest key that pins segments — GC must union all three
-    * (code segments per ingest; catalog segments per train generation,
-    * shared across every ingest commit of that generation).
-    */
-  private[ext] val SegKeys: Seq[String] = Seq("csegs", "centseg", "pqseg")
-
-  private def segDir(root: String, segId: String): String =
-    s"$root/segments/$segId"
-
-  /** Run independent commit jobs concurrently — one shared audited
-    * copy for all three artifact lifecycles ([[graft.ops.Staging.parJobs]]).
-    */
-  private[ext] def parJobs(jobs: (() => Unit)*): Unit =
-    graft.ops.Staging.parJobs(jobs: _*)
-
-  private def writeCodeSegment(df: DataFrame, root: String,
-                               segId: String): Unit = {
-    val dir = segDir(root, segId)
-    // deterministic segment ids: a crash-retry overwrites exactly its
-    // own debris (same discipline as DupGraph.writeIndexSegment)
-    graft.ops.Staging.deleteTree(dir)
-    // Pre-repartition on icell (the DupGraph writeIndexSegment
-    // discipline): without it every input partition opens a writer per
-    // cell it touches — partitions × cells tiny files, the classic
-    // small-files tax on every later probe read — where one batch-sized
-    // shuffle leaves one file per cell per task.
-    df.repartition(col("icell")).write.partitionBy("icell").parquet(dir)
-    // An EMPTY partitioned write emits zero data files (only _SUCCESS)
-    // — unreadable later. Empty deltas are legitimate (a micro-batch of
-    // all-null embeddings encodes nothing) but RARE, so instead of a
-    // pre-write emptiness probe (an extra job on every ingest commit),
-    // detect emptiness from the write's own output — no icell=… dirs, a
-    // metadata listing — and rewrite as plain zero-row parquet, which
-    // keeps the full schema (icell as a regular column, which the
-    // reader selects either way) and stays readable.
-    if (!graft.ops.Staging.list(dir).exists(_.startsWith("icell="))) {
-      graft.ops.Staging.deleteTree(dir)
-      df.limit(0).coalesce(1).write.parquet(dir)
-    }
-  }
-
-  /** Catalog-sized tables (k·dim doubles): one file each — writing a
+  /** Code segments, one per ingest, PARTITIONED BY `icell` so a probe
+    * prunes unprobed cells at the directory level; the centroid and
+    * codebook catalogs, one per train generation, one file each (a
     * few-hundred-row catalog through 32 shuffle partitions costs 32
-    * write tasks now and 32 footer reads on every later open. Stored
-    * as SEGMENTS (not per-version tables) because they are frozen
-    * between retrains: every ingest commit of a generation references
-    * the same pair, so refresh commits pay zero catalog jobs.
+    * write tasks now and 32 footer reads on every later open). GC
+    * unions all three: every ingest commit of a generation references
+    * that generation's catalogs.
     */
-  private def writeCatalogSegment(df: DataFrame, root: String,
-                                  segId: String): Unit = {
-    val dir = segDir(root, segId)
-    graft.ops.Staging.deleteTree(dir)
-    df.coalesce(1).write.parquet(dir)
-  }
+  private val Codes = Segments.Family("csegs", "c", Segments.Partitioned("icell"))
+  private val Cent = Segments.Family("centseg", "n", Segments.OneFile)
+  private val Pq = Segments.Family("pqseg", "b", Segments.OneFile)
 
-  private def openCodeSegment(spark: SparkSession, root: String,
-                              sid: String): DataFrame =
-    Tables.parquet(spark, segDir(root, sid))
+  private[graft] val Artifact =
+    Segments.Kind("ANN index", "AnnIndex", "fmt", FormatVersion, Codes, Cent, Pq)
+
+  private def openCodes(spark: SparkSession, root: String,
+                        sid: String): DataFrame =
+    Segments.open(spark, Codes, root, sid)
       // partitionBy wrote icell as a directory column — restore the
       // stored column order AND the bigint type (partition inference
       // may narrow small cell ids to int, which would miscompile the
@@ -344,7 +274,7 @@ object AnnIndex {
     // independent threads).
     var cent: DataFrame = null
     var pq: DataFrame = null
-    parJobs(
+    graft.ops.Staging.parJobs(
       () => nonEmpty(ivfSeeds, "ivfSeedPred"),
       () => nonEmpty(corpus.filter(pqSeedPred), "pqSeedPred"),
       () => cent = Similarity.centroidFrame(
@@ -389,47 +319,26 @@ object AnnIndex {
   def read(spark: SparkSession, path: String,
            store: graft.ops.PointerStore =
              graft.ops.PointerStore.File): AnnIndex = {
-    val v = graft.ops.Staging.currentVersion(path, store).getOrElse(
-      sys.error(s"no committed ANN index at $path (missing LATEST)"))
-    val dir = graft.ops.Staging.versionDir(path, v)
-    val mf = graft.ops.Staging.readManifest(dir)
-    mf.get("fmt").filter(_ != FormatVersion).foreach(f =>
-      sys.error(s"ANN index at $path encoded under '$f'; this build " +
-        s"speaks '$FormatVersion' — rebuild, do not refresh"))
-    val csegs = graft.ops.Staging.segList(mf, "csegs")
-    // catalog location: segment-shared since the commit-floor trim
-    // (manifest keys centseg/pqseg); per-version table dirs on legacy
-    // artifacts — those upgrade to catalog segments on the next commit
-    def catalog(key: String, legacyDir: String): DataFrame =
-      mf.get(key) match {
-        case Some(sid) => Tables.parquet(spark, segDir(path, sid))
-        case None => Tables.parquet(spark, s"$dir/$legacyDir")
-      }
+    val v = Segments.resolve(Artifact, path, store)
+    val csegs = v.segs("csegs")
     new AnnIndex(
-      catalog("centseg", "centroids"),
-      catalog("pqseg", "pqcent"),
-      () => csegs.map(sid => openCodeSegment(spark, path, sid)),
-      m = mf("m").toInt, subDim = mf("subDim").toInt,
-      lineage = Some(Lineage(path, csegs, mf.get("centseg"),
-        mf.get("pqseg"), deltas = Seq.empty)))
+      catalog(spark, path, v, Cent, "centroids"),
+      catalog(spark, path, v, Pq, "pqcent"),
+      () => csegs.map(sid => openCodes(spark, path, sid)),
+      m = v.manifest("m").toInt, subDim = v.manifest("subDim").toInt,
+      lineage = Some(Lineage(path, csegs, v.manifest.get("centseg"),
+        v.manifest.get("pqseg"), deltas = Seq.empty)))
   }
 
-  /** True iff a complete committed version exists at `path`. */
-  def exists(path: String,
-             store: graft.ops.PointerStore =
-               graft.ops.PointerStore.File): Boolean =
-    graft.ops.Staging.currentVersion(path, store).isDefined
-
-  /** The last streaming batch id folded into the committed index, if
-    * the writer recorded one ([[DupGraph.lastBatchId]]'s contract —
-    * the replay guard for exactly-once `foreachBatch` maintenance).
+  /** A catalog: segment-shared since the commit-floor trim (manifest
+    * keys centseg/pqseg); a per-version table dir on legacy artifacts —
+    * those upgrade to catalog segments on the next commit.
     */
-  def lastBatchId(path: String,
-                  store: graft.ops.PointerStore =
-                    graft.ops.PointerStore.File): Option[Long] =
-    graft.ops.Staging.currentVersion(path, store).flatMap { v =>
-      graft.ops.Staging.readManifest(graft.ops.Staging.versionDir(path, v))
-        .get("batchId").map(_.toLong)
+  private def catalog(spark: SparkSession, path: String, v: Segments.Version,
+                      f: Segments.Family, legacyDir: String): DataFrame =
+    v.manifest.get(f.key) match {
+      case Some(sid) => Segments.open(spark, f, path, sid)
+      case None => Tables.parquet(spark, s"${v.dir}/$legacyDir")
     }
 
   /** Retrain the artifact at `path` from the current corpus VECTORS
@@ -461,13 +370,7 @@ object AnnIndex {
               lloydIters: Int = 2, retain: Int = 1,
               store: graft.ops.PointerStore =
                 graft.ops.PointerStore.File): AnnIndex = {
-    val v0 = graft.ops.Staging.currentVersion(path, store).getOrElse(
-      sys.error(s"no committed ANN index at $path (missing LATEST)"))
-    val mf = graft.ops.Staging.readManifest(
-      graft.ops.Staging.versionDir(path, v0))
-    mf.get("fmt").filter(_ != FormatVersion).foreach(f =>
-      sys.error(s"ANN index at $path encoded under '$f'; this build " +
-        s"speaks '$FormatVersion' — rebuild, do not retrain"))
+    val mf = Segments.resolve(Artifact, path, store, "retrain").manifest
     train(corpus, mf("m").toInt, mf("subDim").toInt,
       ivfSeedPred, pqSeedPred, lloydIters)
       .write(path, batchId = mf.get("batchId").map(_.toLong),
@@ -482,32 +385,18 @@ object AnnIndex {
   def compact(spark: SparkSession, path: String, retain: Int = 1,
               store: graft.ops.PointerStore =
                 graft.ops.PointerStore.File): Unit = {
-    val v0 = graft.ops.Staging.currentVersion(path, store).getOrElse(
-      sys.error(s"no committed ANN index at $path (missing LATEST)"))
-    val dir0 = graft.ops.Staging.versionDir(path, v0)
-    val mf = graft.ops.Staging.readManifest(dir0)
-    val csegs = graft.ops.Staging.segList(mf, "csegs")
+    val v0 = Segments.resolve(Artifact, path, store, "compact")
+    val csegs = v0.segs("csegs")
     if (csegs.size <= 1) return
-    val (dir, v) = graft.ops.Staging.nextVersionDir(path, store)
-    writeCodeSegment(
-      csegs.map(sid => openCodeSegment(spark, path, sid))
-        .reduce(_.unionByName(_)), path, s"c$v")
+    val c = Segments.begin(Artifact, path, store)
+    val cs = c.add(Codes, csegs.map(openCodes(spark, path, _)).reduce(_.unionByName(_)))
     // catalogs: carry the segment references forward (frozen between
     // retrains — compaction folds only code segments); a legacy
     // artifact's per-version catalog dirs upgrade to segments here
-    val (centSeg, pqSeg) = (mf.get("centseg"), mf.get("pqseg")) match {
-      case (Some(cs), Some(ps)) => (cs, ps)
-      case _ =>
-        parJobs(
-          () => writeCatalogSegment(
-            Tables.parquet(spark, s"$dir0/centroids"), path, s"n$v"),
-          () => writeCatalogSegment(
-            Tables.parquet(spark, s"$dir0/pqcent"), path, s"b$v"))
-        (s"n$v", s"b$v")
+    val cats = Seq(Cent -> "centroids", Pq -> "pqcent").map { case (f, legacy) =>
+      f.key -> v0.manifest.getOrElse(f.key,
+        c.add(f, Tables.parquet(spark, s"${v0.dir}/$legacy")))
     }
-    graft.ops.Staging.writeManifest(dir, (mf - "csegs") ++
-      Map("csegs" -> s"c$v", "centseg" -> centSeg, "pqseg" -> pqSeg))
-    graft.ops.Staging.commitVersion(path, v, retain, store)
-    graft.ops.Staging.gcSegments(path, SegKeys, store = store)
+    c.publish(v0.manifest ++ Map("csegs" -> cs) ++ cats, retain)
   }
 }

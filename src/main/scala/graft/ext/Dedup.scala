@@ -1364,59 +1364,34 @@ final class DupGraph private[ext] (val pairs: DataFrame,
             batchId: Option[Long] = None,
             store: graft.ops.PointerStore =
               graft.ops.PointerStore.File): Unit = {
-    val spark = pairs.sparkSession
-    val (dir, v) = graft.ops.Staging.nextVersionDir(path, store)
-    // stale-handle guard (the AnnIndex.write rule): a handle held past
-    // the writers' retention must refuse BEFORE the pointer swap, not
-    // publish a manifest referencing swept segments
-    lineage.filter(_.root == path).foreach { l =>
-      val missing = (l.isegs ++ l.psegs ++ l.clsegs).filterNot(sid =>
-        graft.ops.Staging.exists(DupGraph.segDir(path, sid)))
-      require(missing.isEmpty,
-        s"DupGraph.write: this handle references segments " +
-          s"[${missing.mkString(", ")}] that no longer exist at $path — " +
-          "the artifact was compacted past this reader's retention " +
-          "window. Re-read the graph and re-apply the batch.")
-    }
+    import DupGraph.{Clusters, Idx, Prs}
+    val lin = lineage.filter(_.root == path)
+    val c = graft.ops.Segments.begin(DupGraph.Artifact, path, store,
+      lin.toSeq.flatMap(l => l.isegs ++ l.psegs ++ l.clsegs))
     // the segment writes of one commit are independent jobs over
     // already-materialized inputs (the batch caches / cc checkpoint) —
-    // run them concurrently (graft.ops.Staging.parJobs): the serial
-    // ladder's fixed latency, not data, bounds streaming fold frequency
-    val (isegs, psegs, clsegs, b) = lineage.filter(_.root == path) match {
+    // publish runs them concurrently: the serial ladder's fixed
+    // latency, not data, bounds streaming fold frequency
+    val (isegs, psegs, clsegs, b) = lin match {
       case Some(l) =>
         // incremental commit: only the unwritten deltas become segments
-        val jobs = Seq.newBuilder[() => Unit]
         val (is2, ps2) =
-          if (l.deltaIdx.nonEmpty) {
-            jobs += (() => DupGraph.writeIndexSegment(
-              l.deltaIdx.map(_()).reduce(_.unionByName(_)),
-              path, s"i$v", l.buckets))
-            jobs += (() => DupGraph.writePlainSegment(
-              l.deltaPrs.reduce(_.unionByName(_)), path, s"p$v"))
-            (l.isegs :+ s"i$v", l.psegs :+ s"p$v")
-          } else (l.isegs, l.psegs)
+          if (l.deltaIdx.isEmpty) (l.isegs, l.psegs)
+          else (l.isegs :+ c.add(Idx, l.deltaIdx.map(_()).reduce(_.unionByName(_)),
+            l.buckets), l.psegs :+ c.add(Prs, l.deltaPrs.reduce(_.unionByName(_))))
         val cl2 =
-          if (l.clsegs.isEmpty) {
-            // upgrading an artifact whose clusters still live in a
-            // version DIR (r15-early layout): that dir ages out with
-            // retention, so the FULL current view must become the base
-            // layer — a delta alone would orphan every base assignment
-            jobs += (() => DupGraph.writePlainSegment(clusters, path, s"k$v"))
-            Seq(s"k$v")
-          } else if (l.deltaCls.nonEmpty) {
-            jobs += (() => DupGraph.writePlainSegment(
-              l.deltaCls.reduce(_.unionByName(_)), path, s"k$v"))
-            l.clsegs :+ s"k$v"
-          } else l.clsegs
-        graft.ops.Staging.parJobs(jobs.result(): _*)
+          // upgrading an artifact whose clusters still live in a
+          // version DIR (r15-early layout): that dir ages out with
+          // retention, so the FULL current view must become the base
+          // layer — a delta alone would orphan every base assignment
+          if (l.clsegs.isEmpty) Seq(c.add(Clusters, clusters))
+          else if (l.deltaCls.nonEmpty)
+            l.clsegs :+ c.add(Clusters, l.deltaCls.reduce(_.unionByName(_)))
+          else l.clsegs
         (is2, ps2, cl2, l.buckets)
-      case None =>
-        // full commit: the whole graph as one segment triple
-        graft.ops.Staging.parJobs(
-          () => DupGraph.writeIndexSegment(index, path, s"i$v", buckets),
-          () => DupGraph.writePlainSegment(pairs, path, s"p$v"),
-          () => DupGraph.writePlainSegment(clusters, path, s"k$v"))
-        (Seq(s"i$v"), Seq(s"p$v"), Seq(s"k$v"), buckets)
+      case None => // full commit: the whole graph as one segment triple
+        (Seq(c.add(Idx, index, buckets)), Seq(c.add(Prs, pairs)),
+          Seq(c.add(Clusters, clusters)), buckets)
     }
     // A pre-manifest graph's n/threshold are library-default GUESSES —
     // stamping them into the new manifest would promote the guess to a
@@ -1428,14 +1403,11 @@ final class DupGraph private[ext] (val pairs: DataFrame,
       if (paramsDeclared)
         Map("n" -> n.toString, "threshold" -> threshold.toString)
       else Map.empty
-    graft.ops.Staging.writeManifest(dir,
-      params ++ Map(
-        "hash" -> DupGraph.HashVersion, "buckets" -> b.toString,
-        "isegs" -> isegs.mkString(","), "psegs" -> psegs.mkString(","),
-        "clsegs" -> clsegs.mkString(",")) ++
-        batchId.map("batchId" -> _.toString))
-    graft.ops.Staging.commitVersion(path, v, store = store)
-    DupGraph.gcSegments(spark, path, store)
+    c.publish(params ++ Map(
+      "hash" -> DupGraph.HashVersion, "buckets" -> b.toString,
+      "isegs" -> isegs.mkString(","), "psegs" -> psegs.mkString(","),
+      "clsegs" -> clsegs.mkString(",")) ++
+      batchId.map("batchId" -> _.toString))
   }
 
   /** Deduplicated corpus ([[Dedup.survivors]] over the shared cluster
@@ -1496,50 +1468,18 @@ object DupGraph {
                                         deltaPrs: Seq[DataFrame],
                                         deltaCls: Seq[DataFrame])
 
-  private[ext] def segDir(root: String, segId: String): String =
-    s"$root/segments/$segId"
-
-  /** Write one immutable index segment (bucketed on `s` when
-    * `buckets > 0`). Segment ids are deterministic per version, so a
-    * crash-retry targets exactly its own debris — clean it first
-    * (bucketed CTAS refuses a non-empty location; plain parquet
-    * overwrite would merely mask the stale entry problem).
-    * The explicit pre-repartition on `s` makes each write task hold
-    * exactly one bucket (repartition's murmur3 IS the bucket hash), so
-    * every segment is one file per bucket — no tasks×buckets fan-out.
+  /** The shingle index (bucketed on `s` — a day-2 refresh joins every
+    * stored segment from its bucket files with no Exchange), the pairs,
+    * and the cluster layers (plain: neither is a recurring-join stored
+    * side; an empty frame still writes a schema-bearing file).
     */
-  private def writeIndexSegment(df: DataFrame, root: String, segId: String,
-                                buckets: Int): Unit = {
-    val dir = segDir(root, segId)
-    graft.ops.Staging.deleteTree(dir)
-    graft.ops.Layout.dropBucketedEntry(df.sparkSession, dir)
-    if (buckets > 0)
-      graft.ops.Layout.writeBucketedTable(
-        df.repartition(buckets, col("s")), dir, "s", buckets)
-    else df.write.mode("overwrite").parquet(dir)
-  }
+  private val Idx = graft.ops.Segments.Family("isegs", "i",
+    graft.ops.Segments.Bucketed("s"))
+  private val Prs = graft.ops.Segments.Family("psegs", "p")
+  private val Clusters = graft.ops.Segments.Family("clsegs", "k")
 
-  /** Write one immutable PLAIN-parquet segment (pairs and cluster
-    * deltas — neither is a recurring-join stored side, so no bucket
-    * layout; an empty frame still writes a schema-bearing file).
-    */
-  private def writePlainSegment(df: DataFrame, root: String,
-                                segId: String): Unit = {
-    val dir = segDir(root, segId)
-    graft.ops.Staging.deleteTree(dir)
-    df.write.mode("overwrite").parquet(dir)
-  }
-
-  /** Sweep segments no surviving version references (the shared
-    * [[graft.ops.Staging.gcSegments]] discipline), dropping the swept
-    * dirs' bucketed catalog entries alongside.
-    */
-  private[ext] def gcSegments(spark: org.apache.spark.sql.SparkSession,
-                              root: String,
-                              store: graft.ops.PointerStore =
-                                graft.ops.PointerStore.File): Unit =
-    graft.ops.Staging.gcSegments(root, Seq("isegs", "psegs", "clsegs"),
-      d => graft.ops.Layout.dropBucketedEntry(spark, d), store)
+  private[graft] val Artifact = graft.ops.Segments.Kind("dup-graph",
+    "DupGraph", "hash", HashVersion, Idx, Prs, Clusters)
 
   /** Fold a multi-segment artifact back to one segment TRIPLE: union
     * all index segments into ONE bucketed segment, all pairs segments
@@ -1572,13 +1512,9 @@ object DupGraph {
               keepPairs: Boolean = true, retain: Int = 1,
               store: graft.ops.PointerStore =
                 graft.ops.PointerStore.File): Unit = {
-    val v0 = graft.ops.Staging.currentVersion(path, store).getOrElse(
-      sys.error(s"no committed dup-graph at $path (missing LATEST)"))
-    val dir0 = graft.ops.Staging.versionDir(path, v0)
-    val mf = graft.ops.Staging.readManifest(dir0)
-    val isegs = graft.ops.Staging.segList(mf, "isegs")
-    val psegs = graft.ops.Staging.segList(mf, "psegs")
-    val clsegs = graft.ops.Staging.segList(mf, "clsegs")
+    val v0 = graft.ops.Segments.resolve(Artifact, path, store, "compact")
+    val (isegs, psegs, clsegs) =
+      (v0.segs("isegs"), v0.segs("psegs"), v0.segs("clsegs"))
     // legacy pre-segmented layout (no isegs/psegs/clsegs keys — a
     // single version dir holding index/pairs/clusters directly, which
     // read() still supports): nothing to fold and nothing whose bytes
@@ -1594,33 +1530,24 @@ object DupGraph {
     // periodic prune must not pay a full corpus rewrite for zero effect
     // every time
     if (!keepPairs && compactAlready && psegs.nonEmpty &&
-      Tables.rowCount(spark, segDir(path, psegs.head)) == 0) return
-    val buckets = mf.get("buckets").map(_.toInt).getOrElse(0)
-    val (dir, v) = graft.ops.Staging.nextVersionDir(path, store)
-    val index = isegs.map(sid => Tables.parquet(spark, segDir(path, sid)))
-      .reduce(_.unionByName(_))
-    val foldedPairs = psegs.map(sid => Tables.parquet(spark, segDir(path, sid)))
-      .reduce(_.unionByName(_))
-    // the three rewrites read disjoint stored segments — concurrent
-    // (graft.ops.Staging.parJobs), same as the ingest commit's writes.
-    // pairs: limit(0), not an omitted segment — the read path stays
-    // uniform (one plain-parquet scan with the real schema) and a later
+      Tables.rowCount(spark, graft.ops.Segments.dir(path, psegs.head)) == 0) return
+    val buckets = v0.manifest.get("buckets").map(_.toInt).getOrElse(0)
+    val c = graft.ops.Segments.begin(Artifact, path, store)
+    val foldedPairs = graft.ops.Segments.union(spark, path, psegs)
+    // the three rewrites read disjoint stored segments (run
+    // concurrently, same as the ingest commit's writes). pairs:
+    // limit(0), not an omitted segment — the read path stays uniform
+    // (one plain-parquet scan with the real schema) and a later
     // refresh's unionByName against it is a no-op. clusters: folded to
     // the effective min-per-doc view (sound because labels are monotone
     // non-increasing, see write()).
-    graft.ops.Staging.parJobs(
-      () => writeIndexSegment(index, path, s"i$v", buckets),
-      () => writePlainSegment(
-        if (keepPairs) foldedPairs else foldedPairs.limit(0), path, s"p$v"),
-      () => writePlainSegment(
+    val segs = Map(
+      "isegs" -> c.add(Idx, graft.ops.Segments.union(spark, path, isegs), buckets),
+      "psegs" -> c.add(Prs, if (keepPairs) foldedPairs else foldedPairs.limit(0)),
+      "clsegs" -> c.add(Clusters,
         if (clsegs.nonEmpty) effectiveClusters(spark, path, clsegs)
-        else Tables.parquet(spark, s"$dir0/clusters"), // r15-early layout
-        path, s"k$v"))
-    graft.ops.Staging.writeManifest(dir,
-      (mf - "isegs" - "psegs" - "clsegs") ++
-        Map("isegs" -> s"i$v", "psegs" -> s"p$v", "clsegs" -> s"k$v"))
-    graft.ops.Staging.commitVersion(path, v, retain, store)
-    gcSegments(spark, path, store)
+        else Tables.parquet(spark, s"${v0.dir}/clusters"))) // r15-early layout
+    c.publish(v0.manifest ++ segs, retain)
   }
 
   /** Effective cluster view over layered delta segments: the minimum
@@ -1631,8 +1558,7 @@ object DupGraph {
   private def effectiveClusters(spark: org.apache.spark.sql.SparkSession,
                                 path: String,
                                 clsegs: Seq[String]): DataFrame =
-    clsegs.map(sid => Tables.parquet(spark, segDir(path, sid)))
-      .reduce(_.unionByName(_))
+    graft.ops.Segments.union(spark, path, clsegs)
       .groupBy("doc_id").agg(min("cluster_id").as("cluster_id"))
 
   /** Re-open the LATEST committed version of a graph persisted by
@@ -1646,7 +1572,7 @@ object DupGraph {
     * an immutable segment because retention deletes it). Versions
     * predating manifests entirely fall back to the library defaults
     * n=3, threshold=0.5, plain parquet. Throws if no version was ever
-    * committed (use [[exists]] to probe).
+    * committed (use [[graft.ops.Segments.exists]] to probe).
     *
     * ==Reader lifetime contract==
     * The returned frames lazily scan the resolved version's files (and
@@ -1660,13 +1586,8 @@ object DupGraph {
   def read(spark: org.apache.spark.sql.SparkSession, path: String,
            store: graft.ops.PointerStore =
              graft.ops.PointerStore.File): DupGraph = {
-    val v = graft.ops.Staging.currentVersion(path, store).getOrElse(
-      sys.error(s"no committed dup-graph at $path (missing LATEST)"))
-    val dir = graft.ops.Staging.versionDir(path, v)
-    val mf = graft.ops.Staging.readManifest(dir)
-    mf.get("hash").filter(_ != HashVersion).foreach(h =>
-      sys.error(s"dup-graph at $path hashed under '$h'; this build " +
-        s"speaks '$HashVersion' — rebuild, do not refresh"))
+    val v = graft.ops.Segments.resolve(Artifact, path, store)
+    val (dir, mf) = (v.dir, v.manifest)
     val buckets = mf.get("buckets").map(_.toInt).getOrElse(0)
     // cluster table: layered delta segments (min-per-doc effective
     // view) when the manifest lists them; the per-version table dir
@@ -1678,7 +1599,7 @@ object DupGraph {
     // per-read blocks have no deterministic release. Each action pays
     // one union+min-aggregate over the layers; layer count is bounded
     // by batches-since-[[compact]], which is the documented lever.
-    val clsegs = graft.ops.Staging.segList(mf, "clsegs")
+    val clsegs = v.segs("clsegs")
     val clusters =
       if (clsegs.nonEmpty) effectiveClusters(spark, path, clsegs)
       else Tables.parquet(spark, s"$dir/clusters")
@@ -1688,18 +1609,13 @@ object DupGraph {
     // refresh trusts explicit caller parameters instead of rejecting
     // them against the guess
     val declared = mf.contains("n") && mf.contains("threshold")
-    def openIndex(d: String): DataFrame =
-      if (buckets > 0) graft.ops.Layout.readBucketedTable(spark, d, "s", buckets)
-      else Tables.parquet(spark, d)
     mf.get("isegs") match {
-      case Some(is) => // segmented layout
-        val isegs = is.split(',').toSeq.filter(_.nonEmpty)
-        val psegs = graft.ops.Staging.segList(mf, "psegs")
+      case Some(_) => // segmented layout
+        val (isegs, psegs) = (v.segs("isegs"), v.segs("psegs"))
         new DupGraph(
-          psegs.map(sid => Tables.parquet(spark, segDir(path, sid)))
-            .reduce(_.unionByName(_)),
+          graft.ops.Segments.union(spark, path, psegs),
           clusters,
-          () => isegs.map(sid => openIndex(segDir(path, sid))),
+          () => isegs.map(graft.ops.Segments.open(spark, Idx, path, _, buckets)),
           owned = Seq.empty, // a read graph owns no caches
           n = n, threshold = threshold, paramsDeclared = declared,
           lineage = Some(Lineage(path, isegs, psegs, clsegs, buckets,
@@ -1709,33 +1625,9 @@ object DupGraph {
         new DupGraph(
           Tables.parquet(spark, s"$dir/pairs"),
           clusters,
-          () => Seq(openIndex(s"$dir/index")),
+          () => Seq(graft.ops.Segments.openAt(spark, Idx, s"$dir/index", buckets)),
           owned = Seq.empty,
           n = n, threshold = threshold, paramsDeclared = declared)
     }
   }
-
-  /** True iff a complete committed version exists at `path` — the
-    * restart probe for incremental loops (the pointer is written only
-    * after all three tables are fully on disk).
-    */
-  def exists(path: String,
-             store: graft.ops.PointerStore =
-               graft.ops.PointerStore.File): Boolean =
-    graft.ops.Staging.currentVersion(path, store).isDefined
-
-  /** The last streaming batch id folded into the committed graph, if
-    * the writer recorded one — [[graft.streaming.StreamingDedup]]'s
-    * replay guard (a micro-batch re-delivered after a crash between
-    * the graph's pointer commit and the stream's checkpoint commit
-    * must NOT be folded twice; its ids are already in the stored
-    * index and would self-pair).
-    */
-  def lastBatchId(path: String,
-                  store: graft.ops.PointerStore =
-                    graft.ops.PointerStore.File): Option[Long] =
-    graft.ops.Staging.currentVersion(path, store).flatMap { v =>
-      graft.ops.Staging.readManifest(graft.ops.Staging.versionDir(path, v))
-        .get("batchId").map(_.toLong)
-    }
 }

@@ -2,7 +2,7 @@ package graft.ext
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.model.Tables
+import graft.ops.Segments
 
 /** Durable banded-hamming fingerprint index — the incremental dedup
   * lifecycle for PERCEPTUAL fingerprints (image dHash, audio
@@ -127,56 +127,29 @@ final class HammingIndex private[ext] (
             retain: Int = 1,
             store: graft.ops.PointerStore =
               graft.ops.PointerStore.File): HammingIndex = {
-    val spark = SparkSession.active
-    val (dir, v) = graft.ops.Staging.nextVersionDir(path, store)
+    import HammingIndex.{Idx, Prs}
     val lin = lineage.filter(_.root == path)
-    // stale-handle guard (the AnnIndex.write rule)
-    lin.foreach { l =>
-      val missing = (l.isegs ++ l.psegs).filterNot(sid =>
-        graft.ops.Staging.exists(HammingIndex.segDir(path, sid)))
-      require(missing.isEmpty,
-        s"HammingIndex.write: this handle references segments " +
-          s"[${missing.mkString(", ")}] that no longer exist at $path — " +
-          "the artifact was compacted past this reader's retention " +
-          "window. Re-read the index and re-apply the batch.")
-    }
+    val c = Segments.begin(HammingIndex.Artifact, path, store,
+      lin.toSeq.flatMap(l => l.isegs ++ l.psegs))
+    // the two families are independent jobs over immutable inputs,
+    // committed concurrently (the ladder's fixed latency bounds
+    // streaming ingest frequency)
     val (isegs, psegs) = lin match {
-      case Some(l) if l.ideltas.nonEmpty || l.pdeltas.nonEmpty =>
-        // the two delta families are independent jobs over immutable
-        // inputs — commit them concurrently (the AnnIndex.write rule:
-        // the ladder's fixed latency bounds streaming ingest frequency)
-        graft.ops.Staging.parJobs(
-          () => HammingIndex.writeIndexSegment(
-            l.ideltas.map(_()).reduce(_.unionByName(_)), path, s"i$v",
-            buckets),
-          () => HammingIndex.writePairSegment(
-            l.pdeltas.map(_()).reduce(_.unionByName(_)), path, s"p$v"))
-        (l.isegs :+ s"i$v", l.psegs :+ s"p$v")
-      case Some(l) => (l.isegs, l.psegs)
+      case Some(l) if l.ideltas.isEmpty && l.pdeltas.isEmpty => (l.isegs, l.psegs)
+      case Some(l) =>
+        (l.isegs :+ c.add(Idx, l.ideltas.map(_()).reduce(_.unionByName(_)), buckets),
+          l.psegs :+ c.add(Prs, l.pdeltas.map(_()).reduce(_.unionByName(_))))
       case None =>
-        graft.ops.Staging.parJobs(
-          () => HammingIndex.writeIndexSegment(
-            idxSegs.reduce(_.unionByName(_)), path, s"i$v", buckets),
-          () => HammingIndex.writePairSegment(pairs, path, s"p$v"))
-        (Seq(s"i$v"), Seq(s"p$v"))
+        (Seq(c.add(Idx, idxSegs.reduce(_.unionByName(_)), buckets)),
+          Seq(c.add(Prs, pairs)))
     }
-    graft.ops.Staging.writeManifest(dir,
-      Map("maxDist" -> maxDist.toString, "bands" -> bands.toString,
-        "bits" -> bits.toString, "buckets" -> buckets.toString,
-        "fmt" -> HammingIndex.FormatVersion,
-        "isegs" -> isegs.mkString(","), "psegs" -> psegs.mkString(",")) ++
-        batchId.map("batchId" -> _.toString))
-    graft.ops.Staging.commitVersion(path, v, retain, store)
-    graft.ops.Staging.gcSegments(path, HammingIndex.SegKeys,
-      d => graft.ops.Layout.dropBucketedEntry(spark, d), store)
-    new HammingIndex(
-      () => isegs.map(sid =>
-        HammingIndex.openIndexSegment(spark, path, sid, buckets)),
-      () => psegs.map(sid =>
-        Tables.parquet(spark, HammingIndex.segDir(path, sid))),
-      maxDist, bands, bits, buckets,
-      lineage = Some(HammingIndex.Lineage(path, isegs, psegs,
-        ideltas = Seq.empty, pdeltas = Seq.empty)))
+    c.publish(Map("maxDist" -> maxDist.toString, "bands" -> bands.toString,
+      "bits" -> bits.toString, "buckets" -> buckets.toString,
+      "fmt" -> HammingIndex.FormatVersion,
+      "isegs" -> isegs.mkString(","), "psegs" -> psegs.mkString(",")) ++
+      batchId.map("batchId" -> _.toString), retain)
+    HammingIndex.open(SparkSession.active, path, isegs, psegs, maxDist, bands,
+      bits, buckets)
   }
 }
 
@@ -187,16 +160,18 @@ object HammingIndex {
     */
   val FormatVersion = "hamming/v1"
 
-  private[ext] val SegKeys: Seq[String] = Seq("isegs", "psegs")
+  /** The banded index (bucketed on `bkey`) and the pair deltas. */
+  private val Idx = Segments.Family("isegs", "i", Segments.Bucketed("bkey"))
+  private val Prs = Segments.Family("psegs", "p")
+
+  private[graft] val Artifact =
+    Segments.Kind("hamming index", "HammingIndex", "fmt", FormatVersion, Idx, Prs)
 
   private[ext] final case class Lineage(root: String,
                                         isegs: Seq[String],
                                         psegs: Seq[String],
                                         ideltas: Seq[() => DataFrame],
                                         pdeltas: Seq[() => DataFrame])
-
-  private def segDir(root: String, segId: String): String =
-    s"$root/segments/$segId"
 
   /** The banded index projection of a fingerprint frame — bkey per
     * (item, band) via the ONE shared [[Dedup.hammingBandKeys]].
@@ -229,32 +204,6 @@ object HammingIndex {
     }.reduceOption(_.unionByName(_))
       .map(_.distinct()) // multi-band matches collapse (per stored item)
 
-  private def writeIndexSegment(df: DataFrame, root: String, segId: String,
-                                buckets: Int): Unit = {
-    val dir = segDir(root, segId)
-    graft.ops.Staging.deleteTree(dir)
-    graft.ops.Layout.dropBucketedEntry(df.sparkSession, dir)
-    if (buckets > 0)
-      graft.ops.Layout.writeBucketedTable(
-        df.repartition(buckets, col("bkey")), dir, "bkey", buckets)
-    else df.write.mode("overwrite").parquet(dir)
-  }
-
-  private def writePairSegment(df: DataFrame, root: String,
-                               segId: String): Unit = {
-    val dir = segDir(root, segId)
-    graft.ops.Staging.deleteTree(dir)
-    df.write.mode("overwrite").parquet(dir)
-  }
-
-  private def openIndexSegment(spark: SparkSession, root: String,
-                               sid: String, buckets: Int): DataFrame = {
-    val d = segDir(root, sid)
-    if (buckets > 0)
-      graft.ops.Layout.readBucketedTable(spark, d, "bkey", buckets)
-    else Tables.parquet(spark, d)
-  }
-
   /** Build the initial index from the day-1 fingerprint frame
     * (`doc_id`, `fp`).
     */
@@ -276,41 +225,21 @@ object HammingIndex {
   def read(spark: SparkSession, path: String,
            store: graft.ops.PointerStore =
              graft.ops.PointerStore.File): HammingIndex = {
-    val v = graft.ops.Staging.currentVersion(path, store).getOrElse(
-      sys.error(s"no committed hamming index at $path (missing LATEST)"))
-    val dir = graft.ops.Staging.versionDir(path, v)
-    val mf = graft.ops.Staging.readManifest(dir)
-    mf.get("fmt").filter(_ != FormatVersion).foreach(f =>
-      sys.error(s"hamming index at $path banded under '$f'; this build " +
-        s"speaks '$FormatVersion' — rebuild, do not refresh"))
-    val buckets = mf("buckets").toInt
-    val isegs = graft.ops.Staging.segList(mf, "isegs")
-    val psegs = graft.ops.Staging.segList(mf, "psegs")
-    new HammingIndex(
-      () => isegs.map(sid => openIndexSegment(spark, path, sid, buckets)),
-      () => psegs.map(sid => Tables.parquet(spark, segDir(path, sid))),
-      maxDist = mf("maxDist").toInt, bands = mf("bands").toInt,
-      bits = mf("bits").toInt, buckets = buckets,
-      lineage = Some(Lineage(path, isegs, psegs,
-        ideltas = Seq.empty, pdeltas = Seq.empty)))
+    val v = Segments.resolve(Artifact, path, store)
+    def int(k: String) = v.manifest(k).toInt
+    open(spark, path, v.segs("isegs"), v.segs("psegs"), int("maxDist"),
+      int("bands"), int("bits"), int("buckets"))
   }
 
-  /** True iff a complete committed version exists at `path`. */
-  def exists(path: String,
-             store: graft.ops.PointerStore =
-               graft.ops.PointerStore.File): Boolean =
-    graft.ops.Staging.currentVersion(path, store).isDefined
-
-  /** The last streaming batch id folded into the committed index
-    * ([[DupGraph.lastBatchId]]'s replay-guard contract).
-    */
-  def lastBatchId(path: String,
-                  store: graft.ops.PointerStore =
-                    graft.ops.PointerStore.File): Option[Long] =
-    graft.ops.Staging.currentVersion(path, store).flatMap { v =>
-      graft.ops.Staging.readManifest(graft.ops.Staging.versionDir(path, v))
-        .get("batchId").map(_.toLong)
-    }
+  private def open(spark: SparkSession, path: String, isegs: Seq[String],
+                   psegs: Seq[String], maxDist: Int, bands: Int, bits: Int,
+                   buckets: Int): HammingIndex =
+    new HammingIndex(
+      () => isegs.map(sid => Segments.open(spark, Idx, path, sid, buckets)),
+      () => psegs.map(sid => Segments.open(spark, Prs, path, sid)),
+      maxDist, bands, bits, buckets,
+      lineage = Some(Lineage(path, isegs, psegs,
+        ideltas = Seq.empty, pdeltas = Seq.empty)))
 
   /** Fold both segment families back to one each ([[DupGraph.compact]]
     * discipline: explicit, separate from ingest, no-op when already
@@ -324,28 +253,15 @@ object HammingIndex {
               rebucket: Option[Int] = None,
               store: graft.ops.PointerStore =
                 graft.ops.PointerStore.File): Unit = {
-    val v0 = graft.ops.Staging.currentVersion(path, store).getOrElse(
-      sys.error(s"no committed hamming index at $path (missing LATEST)"))
-    val mf = graft.ops.Staging.readManifest(
-      graft.ops.Staging.versionDir(path, v0))
-    val isegs = graft.ops.Staging.segList(mf, "isegs")
-    val psegs = graft.ops.Staging.segList(mf, "psegs")
+    val v0 = Segments.resolve(Artifact, path, store, "compact")
+    val (isegs, psegs) = (v0.segs("isegs"), v0.segs("psegs"))
+    val buckets = rebucket.getOrElse(v0.manifest("buckets").toInt)
     if (isegs.size <= 1 && psegs.size <= 1 &&
-      rebucket.forall(_ == mf("buckets").toInt)) return
-    val (dir, v) = graft.ops.Staging.nextVersionDir(path, store)
-    val buckets = rebucket.getOrElse(mf("buckets").toInt)
-    graft.ops.Staging.parJobs(
-      () => writeIndexSegment(
-        isegs.map(sid => Tables.parquet(spark, segDir(path, sid)))
-          .reduce(_.unionByName(_)), path, s"i$v", buckets),
-      () => writePairSegment(
-        psegs.map(sid => Tables.parquet(spark, segDir(path, sid)))
-          .reduce(_.unionByName(_)), path, s"p$v"))
-    graft.ops.Staging.writeManifest(dir,
-      (mf - "isegs" - "psegs") ++ Map("isegs" -> s"i$v", "psegs" -> s"p$v",
-        "buckets" -> buckets.toString))
-    graft.ops.Staging.commitVersion(path, v, retain, store)
-    graft.ops.Staging.gcSegments(path, SegKeys,
-      d => graft.ops.Layout.dropBucketedEntry(spark, d), store)
+      buckets == v0.manifest("buckets").toInt) return
+    val c = Segments.begin(Artifact, path, store)
+    val i = c.add(Idx, Segments.union(spark, path, isegs), buckets)
+    val p = c.add(Prs, Segments.union(spark, path, psegs))
+    c.publish(v0.manifest ++ Map("isegs" -> i, "psegs" -> p,
+      "buckets" -> buckets.toString), retain)
   }
 }

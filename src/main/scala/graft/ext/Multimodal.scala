@@ -148,7 +148,8 @@ object Multimodal {
     * take the full AudioSystem route unchanged. Why this exists:
     * `AudioSystem.getAudioInputStream` runs a synchronized SPI-registry
     * scan per call, which SERIALIZES concurrent decode tasks — 32
-    * threads measured slower in aggregate than one (CodecContention);
+    * threads measured slower in aggregate than one (OPTIMIZATION_r19.md,
+    * media rows: the codec contention micro-benchmark);
     * the canonical-WAV case (every fixture clip, and the dominant
     * real-lake shape) is a 40-line header parse with no shared state.
     */
@@ -216,8 +217,9 @@ object Multimodal {
         // — but SKIP the AudioSystem conversion chain when the stream
         // already IS little-endian signed 16-bit PCM (every WAV): the
         // codec chain costs ~10x the raw read even for an identity
-        // conversion (measured via MediaProbe: the conversion stream
-        // dominated the whole decode+FFT fingerprint path)
+        // conversion (measured per media stage, OPTIMIZATION_r19.md: the
+        // conversion stream dominated the whole decode+FFT fingerprint
+        // path)
         val already = src.getEncoding ==
           javax.sound.sampled.AudioFormat.Encoding.PCM_SIGNED &&
           src.getSampleSizeInBits == 16 && !src.isBigEndian
@@ -1375,8 +1377,8 @@ object Multimodal {
     * Byte-identical to what `AudioSystem.write(..., Type.WAVE, ...)`
     * emits for this format (MultimodalSpec pins the identity), but
     * without the synchronized SPI-registry walk that serialized 32
-    * concurrent synthesis tasks (CodecContention: 32-thread WAV encode
-    * measured SLOWER in aggregate than 1-thread).
+    * concurrent synthesis tasks (OPTIMIZATION_r19.md, media rows: a
+    * 32-thread WAV encode measured SLOWER in aggregate than 1-thread).
     */
   private[ext] def encodeWav(samples: Array[Float], rate: Int): Array[Byte] = {
     val dataLen = samples.length * 2

@@ -2,7 +2,7 @@ package graft.ext
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.model.Tables
+import graft.ops.Segments
 
 /** Durable seen-shingle index — the artifact behind
   * [[TextAnalysis.noveltyRateIncremental]]'s production loop: the set
@@ -82,42 +82,19 @@ final class NoveltyIndex private[ext] (
   def write(path: String, batchId: Option[Long] = None,
             store: graft.ops.PointerStore =
               graft.ops.PointerStore.File): NoveltyIndex = {
-    val spark = SparkSession.active
-    val (dir, v) = graft.ops.Staging.nextVersionDir(path, store)
-    // stale-handle guard (the AnnIndex.write rule): a handle held past
-    // the writers' retention must refuse BEFORE the pointer swap, not
-    // publish a manifest referencing swept segments
-    lineage.filter(_.root == path).foreach { l =>
-      val missing = l.ssegs.filterNot(sid =>
-        graft.ops.Staging.exists(NoveltyIndex.segDir(path, sid)))
-      require(missing.isEmpty,
-        s"NoveltyIndex.write: this handle references segments " +
-          s"[${missing.mkString(", ")}] that no longer exist at $path — " +
-          "the artifact was compacted past this reader's retention " +
-          "window. Re-read the index and re-apply the batch.")
-    }
-    val ssegs = lineage.filter(_.root == path) match {
+    import NoveltyIndex.Segs
+    val lin = lineage.filter(_.root == path)
+    val c = Segments.begin(NoveltyIndex.Artifact, path, store, lin.toSeq.flatMap(_.ssegs))
+    val ssegs = lin match {
+      case Some(l) if l.deltas.isEmpty => l.ssegs
       case Some(l) =>
-        if (l.deltas.nonEmpty) {
-          NoveltyIndex.writeSegment(
-            l.deltas.map(_()).reduce(_.unionByName(_)), path, s"s$v", buckets)
-          l.ssegs :+ s"s$v"
-        } else l.ssegs
-      case None =>
-        NoveltyIndex.writeSegment(seen, path, s"s$v", buckets)
-        Seq(s"s$v")
+        l.ssegs :+ c.add(Segs, l.deltas.map(_()).reduce(_.unionByName(_)), buckets)
+      case None => Seq(c.add(Segs, seen, buckets))
     }
-    graft.ops.Staging.writeManifest(dir,
-      Map("n" -> n.toString, "buckets" -> buckets.toString,
-        "hash" -> NoveltyIndex.HashVersion, "ssegs" -> ssegs.mkString(",")) ++
-        batchId.map("batchId" -> _.toString))
-    graft.ops.Staging.commitVersion(path, v, store = store)
-    graft.ops.Staging.gcSegments(path, Seq("ssegs"),
-      d => graft.ops.Layout.dropBucketedEntry(spark, d), store)
-    new NoveltyIndex(
-      () => ssegs.map(sid => NoveltyIndex.openSegment(spark, path, sid, buckets)),
-      n, buckets,
-      lineage = Some(NoveltyIndex.Lineage(path, ssegs, deltas = Seq.empty)))
+    c.publish(Map("n" -> n.toString, "buckets" -> buckets.toString,
+      "hash" -> NoveltyIndex.HashVersion, "ssegs" -> ssegs.mkString(",")) ++
+      batchId.map("batchId" -> _.toString))
+    NoveltyIndex.open(SparkSession.active, path, ssegs, n, buckets)
   }
 }
 
@@ -128,23 +105,15 @@ object NoveltyIndex {
     */
   val HashVersion: String = DupGraph.HashVersion
 
+  /** The seen-shingle segments, bucketed on `sh`. */
+  private val Segs = Segments.Family("ssegs", "s", Segments.Bucketed("sh"))
+
+  private[graft] val Artifact =
+    Segments.Kind("novelty index", "NoveltyIndex", "hash", HashVersion, Segs)
+
   private[ext] final case class Lineage(root: String,
                                         ssegs: Seq[String],
                                         deltas: Seq[() => DataFrame])
-
-  private def segDir(root: String, segId: String): String =
-    s"$root/segments/$segId"
-
-  private def writeSegment(df: DataFrame, root: String, segId: String,
-                           buckets: Int): Unit = {
-    val dir = segDir(root, segId)
-    graft.ops.Staging.deleteTree(dir) // deterministic id: retry-safe
-    graft.ops.Layout.dropBucketedEntry(df.sparkSession, dir)
-    if (buckets > 0)
-      graft.ops.Layout.writeBucketedTable(
-        df.repartition(buckets, col("sh")), dir, "sh", buckets)
-    else df.write.mode("overwrite").parquet(dir)
-  }
 
   /** Build the initial index from the day-1 corpus. */
   def build(docs: DataFrame, text: Column, id: Column, n: Int,
@@ -161,45 +130,16 @@ object NoveltyIndex {
   def read(spark: SparkSession, path: String,
            store: graft.ops.PointerStore =
              graft.ops.PointerStore.File): NoveltyIndex = {
-    val v = graft.ops.Staging.currentVersion(path, store).getOrElse(
-      sys.error(s"no committed novelty index at $path (missing LATEST)"))
-    val dir = graft.ops.Staging.versionDir(path, v)
-    val mf = graft.ops.Staging.readManifest(dir)
-    mf.get("hash").filter(_ != HashVersion).foreach(h =>
-      sys.error(s"novelty index at $path hashed under '$h'; this build " +
-        s"speaks '$HashVersion' — rebuild, do not refresh"))
-    val buckets = mf("buckets").toInt
-    val ssegs = graft.ops.Staging.segList(mf, "ssegs")
+    val v = Segments.resolve(Artifact, path, store)
+    open(spark, path, v.segs("ssegs"), v.manifest("n").toInt,
+      v.manifest("buckets").toInt)
+  }
+
+  private def open(spark: SparkSession, path: String, ssegs: Seq[String],
+                   n: Int, buckets: Int): NoveltyIndex =
     new NoveltyIndex(
-      () => ssegs.map(sid => openSegment(spark, path, sid, buckets)),
-      n = mf("n").toInt, buckets = buckets,
-      lineage = Some(Lineage(path, ssegs, deltas = Seq.empty)))
-  }
-
-  private def openSegment(spark: SparkSession, root: String, sid: String,
-                          buckets: Int): DataFrame = {
-    val d = segDir(root, sid)
-    if (buckets > 0) graft.ops.Layout.readBucketedTable(spark, d, "sh", buckets)
-    else Tables.parquet(spark, d)
-  }
-
-  /** True iff a complete committed version exists at `path`. */
-  def exists(path: String,
-             store: graft.ops.PointerStore =
-               graft.ops.PointerStore.File): Boolean =
-    graft.ops.Staging.currentVersion(path, store).isDefined
-
-  /** The last streaming batch id folded into the committed index, if
-    * the writer recorded one ([[DupGraph.lastBatchId]]'s contract —
-    * the replay guard for exactly-once `foreachBatch` maintenance).
-    */
-  def lastBatchId(path: String,
-                  store: graft.ops.PointerStore =
-                    graft.ops.PointerStore.File): Option[Long] =
-    graft.ops.Staging.currentVersion(path, store).flatMap { v =>
-      graft.ops.Staging.readManifest(graft.ops.Staging.versionDir(path, v))
-        .get("batchId").map(_.toLong)
-    }
+      () => ssegs.map(sid => Segments.open(spark, Segs, path, sid, buckets)),
+      n, buckets, lineage = Some(Lineage(path, ssegs, deltas = Seq.empty)))
 
   /** Fold segments back to one ([[DupGraph.compact]] discipline).
     * `retain = 2` when compaction runs in the same fold as an ingest
@@ -208,20 +148,12 @@ object NoveltyIndex {
   def compact(spark: SparkSession, path: String, retain: Int = 1,
               store: graft.ops.PointerStore =
                 graft.ops.PointerStore.File): Unit = {
-    val v0 = graft.ops.Staging.currentVersion(path, store).getOrElse(
-      sys.error(s"no committed novelty index at $path (missing LATEST)"))
-    val mf = graft.ops.Staging.readManifest(
-      graft.ops.Staging.versionDir(path, v0))
-    val ssegs = graft.ops.Staging.segList(mf, "ssegs")
+    val v0 = Segments.resolve(Artifact, path, store, "compact")
+    val ssegs = v0.segs("ssegs")
     if (ssegs.size <= 1) return
-    val (dir, v) = graft.ops.Staging.nextVersionDir(path, store)
-    writeSegment(
-      ssegs.map(sid => Tables.parquet(spark, segDir(path, sid)))
-        .reduce(_.unionByName(_)),
-      path, s"s$v", mf("buckets").toInt)
-    graft.ops.Staging.writeManifest(dir, (mf - "ssegs") + ("ssegs" -> s"s$v"))
-    graft.ops.Staging.commitVersion(path, v, retain, store)
-    graft.ops.Staging.gcSegments(path, Seq("ssegs"),
-      d => graft.ops.Layout.dropBucketedEntry(spark, d), store)
+    val c = Segments.begin(Artifact, path, store)
+    val s = c.add(Segs, Segments.union(spark, path, ssegs),
+      v0.manifest("buckets").toInt)
+    c.publish(v0.manifest + ("ssegs" -> s), retain)
   }
 }

@@ -33,8 +33,8 @@ package graft.ops
   * may then name a dir the loser partially rewrote. The lease closes
   * that window: [[Staging.acquireWriter]] takes the lease BEFORE any
   * version dir is staged, [[Staging.nextVersionDir]] refuses to stage
-  * while another holder's unexpired lease exists, and the three
-  * [[graft.streaming.Maintenance]] loops acquire one lease per fold —
+  * while another holder's unexpired lease exists, and the streaming
+  * maintainers ([[graft.streaming.Maintenance.fold]]) acquire one lease per fold —
   * so the loser of a two-writer race fails loudly before writing a
   * byte. Lease strength follows the store: the JDBC implementation is
   * a transactional compare-and-swap (hard mutual exclusion up to clock

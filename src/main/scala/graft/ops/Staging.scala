@@ -9,10 +9,11 @@ import org.apache.hadoop.fs.{FileContext, FileSystem, Options, Path}
 import org.apache.spark.sql.SparkSession
 
 /** Shared filesystem plumbing for the staged-promote and
-  * versioned-pointer write disciplines (one audited copy — Dedup's
-  * durable graph, AnnIndex, PretrainDemo's shard promote, and the
-  * fixture tools all route through here; crash-safety code that exists
-  * twice drifts).
+  * versioned-pointer write disciplines (one audited copy; crash-safety
+  * code that exists twice drifts). [[Segments]] is the one segment
+  * lifecycle built on it (the four durable indexes: DupGraph,
+  * HammingIndex, NoveltyIndex, AnnIndex); [[promote]] serves
+  * PretrainDemo's shard promote.
   *
   * ==Portability contract==
   * All paths go through the Hadoop `FileSystem`/`FileContext` API, so
@@ -62,9 +63,10 @@ object Staging {
     * (persisted/checkpointed frames; concurrent first-materialization
     * of a shared lazy checkpoint is serialized by Spark's
     * checkpoint-state and block locks). First failure propagates after
-    * all threads finish (no half-started debris left running).
+    * all threads finish (no half-started debris left running). A single
+    * job runs on the calling thread.
     */
-  def parJobs(jobs: (() => Unit)*): Unit = {
+  def parJobs(jobs: (() => Unit)*): Unit = if (jobs.size <= 1) jobs.foreach(_()) else {
     val errs = new java.util.concurrent.ConcurrentLinkedQueue[Throwable]
     val ts = jobs.map(j => new Thread(() => {
       try j() catch { case t: Throwable => errs.add(t); () }
@@ -339,8 +341,8 @@ object Staging {
     * inside the retention window — the GC half of the
     * segment-incremental commit discipline (immutable segments under
     * `root/segments/`, version manifests listing the live ones by id;
-    * Dedup's DupGraph, AnnIndex, and NoveltyIndex all commit this
-    * way). `segKeys` names the manifest keys carrying comma-separated
+    * [[Segments.Commit.publish]] runs it after every commit of the four
+    * durable indexes). `segKeys` names the manifest keys carrying comma-separated
     * segment-id lists; `onDelete` runs per swept dir (e.g.
     * bucketed-catalog cleanup). Runs after a commit: a reader inside
     * the retention window is safe because its version's manifest still

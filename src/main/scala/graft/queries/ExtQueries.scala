@@ -2920,7 +2920,7 @@ object ExtQueries {
     * some doc's novelty rate (or crash the b2 scoring, which
     * evaluates lazily AFTER the compact) and break the hash — its
     * INVISIBILITY is what this row proves (the `q_ann_retrain` rule
-    * applied to segment folding). `maybeCompact`-driven auto-triggers
+    * applied to segment folding). `Maintenance.fold`'s auto-triggers
     * are additionally soak-pinned in StreamingIndexesSpec; this row
     * puts the rewrite itself under the per-round DuckDB hash.
     *

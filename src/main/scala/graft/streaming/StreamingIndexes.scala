@@ -6,100 +6,77 @@ import org.apache.spark.sql.streaming.StreamingQuery
 
 import graft.ext.{AnnIndex, HammingIndex, NoveltyIndex, Similarity}
 
-/** Shared exactly-once discipline for `foreachBatch` artifact
-  * maintenance (the [[StreamingDedup]] contract, one audited copy):
-  * every committed version records the last-applied `batchId`; the
-  * exact last batch re-delivered after a crash is SKIPPED (idempotent
-  * sink), and an id BELOW the stored one fails loudly — under a single
-  * checkpoint only the last batch can replay, so a smaller id means
-  * the stream was restarted against this artifact with a fresh
-  * checkpoint (ids restart at 0) and silently skipping would drop
-  * every real batch until the new counter caught up.
+/** The one micro-batch fold of the four `foreachBatch` artifact
+  * maintainers (StreamingDedup, StreamingNovelty, StreamingHamming,
+  * StreamingAnn): each keeps only its build/refresh step, its
+  * parameter-mismatch refusal and its hooks.
   */
 private[graft] object Maintenance {
 
-  /** Run one fold under the artifact's writer lease
-    * ([[graft.ops.Staging.acquireWriter]]) — the enforcement of
-    * single-writer-per-artifact all three maintainers share. A second
-    * uncoordinated maintainer on the same artifact fails at acquire,
-    * BEFORE reading state or staging a version dir (the two-writer
-    * version-dir clobber window is closed at its entry, not at
-    * publish). The lease is re-extended by every commit inside the
-    * fold ([[graft.ops.Staging.nextVersionDir]]) and released when the
-    * fold ends, crash or not; a holder that dies between folds blocks
-    * a replacement for at most [[graft.ops.Staging.DefaultLeaseTtlMs]].
-    * Exclusion strength follows the store (JDBC = transactional CAS,
-    * File = best-effort lock file — the [[graft.ops.PointerStore]]
-    * contract).
+  /** Fold one micro-batch into the artifact of `kind` at `path`:
+    *
+    *  - '''Writer lease''' ([[graft.ops.Staging.acquireWriter]]): a
+    *    second uncoordinated maintainer on the same artifact fails at
+    *    acquire, BEFORE reading state or staging a version dir. Every
+    *    commit inside the fold re-extends the lease
+    *    ([[graft.ops.Staging.nextVersionDir]]); it is released when the
+    *    fold ends, crash or not, and a holder that dies between folds
+    *    blocks a replacement for at most
+    *    [[graft.ops.Staging.DefaultLeaseTtlMs]]. Exclusion strength
+    *    follows the store ([[graft.ops.PointerStore]]).
+    *  - '''Exactly-once replay''': every committed version records the
+    *    last-applied `batchId`. The exact last batch re-delivered after
+    *    a crash is SKIPPED (idempotent sink); an id BELOW the stored one
+    *    fails loudly — under a single checkpoint only the last batch
+    *    can replay, so a smaller id means a restart with a fresh
+    *    checkpoint (ids restart at 0), and skipping would drop every
+    *    real batch until the new counter caught up. The probe is the
+    *    COMMIT POINTER, not a table dir: a crash mid-write can never
+    *    make a restarted loop mistake a partial artifact for "nothing
+    *    stored" and rebuild from one batch.
+    *  - `step(stored)` builds (nothing committed yet) or refreshes, and
+    *    commits with `batchId`.
+    *  - '''Auto-compaction''', when `step` returns true: one manifest
+    *    read counts the live segments of `kind`, and `compact` runs when
+    *    any family's list exceeds `compactEvery` (`<= 0` disables).
+    *    Without it, segment count, read amplification (one scan per
+    *    segment) and fold cost (one anti-join / probe-join per stored
+    *    segment) grow one step per batch forever; with it, one
+    *    corpus-sized rewrite every ~`compactEvery` batches. A trigger
+    *    fold commits TWICE, so `compact` must pass `retain = 2`: a
+    *    reader current at fold start is two commits stale by fold end
+    *    and must still resolve complete segments.
     */
-  def withWriterLease[A](what: String, path: String,
-                         store: graft.ops.PointerStore)(fold: => A): A = {
+  def fold(what: String, kind: graft.ops.Segments.Kind, path: String,
+           batchId: Long, compactEvery: Int, store: graft.ops.PointerStore)
+          (step: Boolean => Boolean)(compact: => Unit): Unit = {
     val lease =
       try graft.ops.Staging.acquireWriter(path, store)
       catch {
         case e: IllegalStateException => throw new IllegalStateException(
           s"$what: cannot fold into $path — ${e.getMessage}", e)
       }
-    try fold finally lease.release()
+    try {
+      val stored = graft.ops.Segments.exists(path, store)
+      val last = if (stored) graft.ops.Segments.lastBatchId(path, store) else None
+      last.filter(batchId < _).foreach(l => throw new IllegalStateException(
+        s"$what: micro-batch id $batchId is below the artifact's " +
+          s"last-applied batch id $l at $path — the stream's checkpoint " +
+          "does not match this artifact (restarted with a fresh " +
+          "checkpoint?). Resume the original checkpoint or start a new " +
+          "artifact path."))
+      if (!last.contains(batchId) && step(stored) && compactEvery > 0 &&
+        graft.ops.Segments.segmentCount(path, kind.keys, store) > compactEvery)
+        compact
+    } finally lease.release()
   }
 
-  /** True ⇒ fold the batch; false ⇒ exact-last replay, skip. Throws on
-    * a checkpoint/artifact mismatch.
-    */
-  def shouldFold(what: String, path: String, batchId: Long,
-                 stored: Option[Long]): Boolean = {
-    stored.filter(batchId < _).foreach(l => throw new IllegalStateException(
-      s"$what: micro-batch id $batchId is below the artifact's " +
-        s"last-applied batch id $l at $path — the stream's checkpoint " +
-        "does not match this artifact (restarted with a fresh " +
-        "checkpoint?). Resume the original checkpoint or start a new " +
-        "artifact path."))
-    !stored.contains(batchId)
-  }
-
-  /** Auto-compaction policy shared by the three maintainers: after a
-    * fold commits, count the committed version's live segments
-    * (metadata-only — one manifest read) and run the artifact's
-    * `compact` when any `segKeys` list exceeds `threshold`. Without
-    * this, segment count grows one per batch FOREVER and both read
-    * amplification (one scan per segment) and per-batch fold cost (one
-    * anti-join / probe-join per stored segment) grow with stream age —
-    * the classic unbounded-LSM failure. With it, cost is amortized:
-    * one corpus-sized rewrite every ~`threshold` batches, segment
-    * count bounded by `threshold`+1 observed between folds. A trigger
-    * fold commits TWICE (ingest, then compact), so the compact commit
-    * must pass `retain = 2` to its versioned-pointer commit — a reader
-    * that was current at fold start is two commits stale by fold end
-    * and must still resolve complete segments (the fold-current-reader
-    * contract a single-commit fold gives for free). `threshold <= 0`
-    * disables.
-    */
-  def maybeCompact(path: String, segKeys: Seq[String], threshold: Int,
-                   store: graft.ops.PointerStore =
-                     graft.ops.PointerStore.File)
-                  (compact: => Unit): Unit = {
-    if (threshold > 0 && segmentCount(path, segKeys, store) > threshold)
-      compact
-  }
-
-  /** Default segment-count threshold for [[maybeCompact]]: high enough
-    * that the corpus rewrite amortizes to ~1/16 of a full rebuild per
-    * batch, low enough that read amplification (segments scanned per
-    * novelty/probe/refresh join) stays single-digit-small.
+  /** Default segment-count threshold for [[fold]]'s auto-compaction:
+    * high enough that the corpus rewrite amortizes to ~1/16 of a full
+    * rebuild per batch, low enough that read amplification (segments
+    * scanned per novelty/probe/refresh join) stays single-digit-small.
     */
   val DefaultCompactEvery = 16
-
-  /** Live segment count of the committed version (max across the
-    * manifest's segment-list keys; 0 when nothing is committed).
-    */
-  def segmentCount(path: String, segKeys: Seq[String],
-                   store: graft.ops.PointerStore =
-                     graft.ops.PointerStore.File): Int =
-    graft.ops.Staging.currentVersion(path, store).map { v =>
-      val mf = graft.ops.Staging.readManifest(
-        graft.ops.Staging.versionDir(path, v))
-      segKeys.map(k => graft.ops.Staging.segList(mf, k).size).max
-    }.getOrElse(0)
 }
 
 /** Streaming maintenance of the durable seen-shingle index
@@ -153,16 +130,13 @@ object StreamingNovelty {
                                  None,
                                store: graft.ops.PointerStore =
                                  graft.ops.PointerStore.File): Unit =
-    Maintenance.withWriterLease("StreamingNovelty", path, store) {
-    val spark = batch.sparkSession
-    val stored = NoveltyIndex.exists(path, store)
-    val last = if (stored) NoveltyIndex.lastBatchId(path, store) else None
-    if (Maintenance.shouldFold("StreamingNovelty", path, batchId, last)) {
+    Maintenance.fold("StreamingNovelty", NoveltyIndex.Artifact, path, batchId,
+      compactEvery, store) { stored =>
       val idx =
         if (!stored)
           NoveltyIndex.build(batch, col("text"), col("doc_id"), n, buckets)
         else {
-          val stored = NoveltyIndex.read(spark, path, store)
+          val stored = NoveltyIndex.read(batch.sparkSession, path, store)
           // mixing shingle widths joins incompatible spaces — the same
           // loud refusal refreshDupGraph makes; silently folding with
           // the stored width while the caller believes they changed it
@@ -176,12 +150,8 @@ object StreamingNovelty {
           stored.update(batch, col("text"), col("doc_id"))
         }
       idx.write(path, batchId = Some(batchId), store = store)
-      Maintenance.maybeCompact(path, Seq("ssegs"), compactEvery, store) {
-        NoveltyIndex.compact(spark, path, retain = 2, store = store)
-      }
-    }
-    ()
-  }
+      true
+    }(NoveltyIndex.compact(batch.sparkSession, path, retain = 2, store = store))
 }
 
 /** Streaming maintenance of the durable IVF-PQ index ([[AnnIndex]]):
@@ -258,11 +228,9 @@ object StreamingAnn {
       "StreamingAnn: retrainBelowInertia needs retrainCorpus — PQ codes " +
         "are lossy, so a retrain must re-read the corpus VECTORS from " +
         "the lake, which only the caller can supply")
-    Maintenance.withWriterLease("StreamingAnn", path, store) {
     val spark = batch.sparkSession
-    val stored = AnnIndex.exists(path, store)
-    val last = if (stored) AnnIndex.lastBatchId(path, store) else None
-    if (Maintenance.shouldFold("StreamingAnn", path, batchId, last)) {
+    Maintenance.fold("StreamingAnn", AnnIndex.Artifact, path, batchId,
+      compactEvery, store) { stored =>
       val norms = Similarity.withNorm(batch, col("vec_id"), col("embedding"))
       var drifted = false
       val idx =
@@ -284,29 +252,23 @@ object StreamingAnn {
       // a bootstrap batch with no trainable vectors commits NOTHING
       // (not even the batchId): the next non-empty batch bootstraps,
       // and a replay of the skipped batch is a harmless re-skip
-      idx.foreach { i =>
-        i.write(path, batchId = Some(batchId), store = store)
-        if (drifted) {
-          // ingest-first, then the full-generation recommit: second
-          // commit of this fold ⇒ retain = 2 (reader-retention rule).
-          // Seeds get the bootstrap fallback — an id space the default
-          // modulo predicate misses must defer gracefully (next drifted
-          // batch re-arms), never kill the stream on the empty-seed
-          // require.
-          val corpusNorms = Similarity.withNorm(retrainCorpus.get(),
-            col("vec_id"), col("embedding"))
-          fallbackSeedPred(corpusNorms).foreach(p =>
-            AnnIndex.retrain(spark, path, corpusNorms,
-              ivfSeedPred = p, pqSeedPred = p, retain = 2, store = store))
-        } else {
-          Maintenance.maybeCompact(path, Seq("csegs"), compactEvery, store) {
-            AnnIndex.compact(spark, path, retain = 2, store = store)
-          }
-        }
+      idx.foreach(_.write(path, batchId = Some(batchId), store = store))
+      if (idx.isDefined && drifted) {
+        // ingest-first, then the full-generation recommit: second
+        // commit of this fold ⇒ retain = 2 (reader-retention rule).
+        // Seeds get the bootstrap fallback — an id space the default
+        // modulo predicate misses must defer gracefully (next drifted
+        // batch re-arms), never kill the stream on the empty-seed
+        // require. The retrained artifact is one segment: nothing to
+        // compact.
+        val corpusNorms = Similarity.withNorm(retrainCorpus.get(),
+          col("vec_id"), col("embedding"))
+        fallbackSeedPred(corpusNorms).foreach(p =>
+          AnnIndex.retrain(spark, path, corpusNorms,
+            ivfSeedPred = p, pqSeedPred = p, retain = 2, store = store))
       }
-    }
-    ()
-    }
+      idx.isDefined && !drifted
+    }(AnnIndex.compact(spark, path, retain = 2, store = store))
   }
 
   /** Mean batch-to-stored-centroid cosine ([[Similarity.kmeansInertia]]
@@ -410,33 +372,25 @@ object StreamingHamming {
                                  Maintenance.DefaultCompactEvery,
                                store: graft.ops.PointerStore =
                                  graft.ops.PointerStore.File): Unit =
-    Maintenance.withWriterLease("StreamingHamming", path, store) {
-      val spark = batch.sparkSession
-      val stored = HammingIndex.exists(path, store)
-      val last = if (stored) HammingIndex.lastBatchId(path, store) else None
-      if (Maintenance.shouldFold("StreamingHamming", path, batchId, last)) {
-        val idx =
-          if (!stored)
-            HammingIndex.build(batch, maxDist, bands, bits, buckets)
-          else {
-            val storedIdx = HammingIndex.read(spark, path, store)
-            // mixing banding schemes joins incompatible bucket spaces —
-            // the StreamingNovelty width rule, applied to all three
-            // parameters that define the pair semantics
-            require(maxDist == storedIdx.maxDist &&
-                bands == storedIdx.bands && bits == storedIdx.bits,
-              s"StreamingHamming: (maxDist=$maxDist, bands=$bands, " +
-                s"bits=$bits) != stored index's (${storedIdx.maxDist}, " +
-                s"${storedIdx.bands}, ${storedIdx.bits}) at $path — " +
-                "rebuild, do not mix banding schemes")
-            storedIdx.refresh(batch)
-          }
-        idx.write(path, batchId = Some(batchId), store = store)
-        Maintenance.maybeCompact(path, Seq("isegs", "psegs"),
-          compactEvery, store) {
-          HammingIndex.compact(spark, path, retain = 2, store = store)
+    Maintenance.fold("StreamingHamming", HammingIndex.Artifact, path, batchId,
+      compactEvery, store) { stored =>
+      val idx =
+        if (!stored)
+          HammingIndex.build(batch, maxDist, bands, bits, buckets)
+        else {
+          val storedIdx = HammingIndex.read(batch.sparkSession, path, store)
+          // mixing banding schemes joins incompatible bucket spaces —
+          // the StreamingNovelty width rule, applied to all three
+          // parameters that define the pair semantics
+          require(maxDist == storedIdx.maxDist &&
+              bands == storedIdx.bands && bits == storedIdx.bits,
+            s"StreamingHamming: (maxDist=$maxDist, bands=$bands, " +
+              s"bits=$bits) != stored index's (${storedIdx.maxDist}, " +
+              s"${storedIdx.bands}, ${storedIdx.bits}) at $path — " +
+              "rebuild, do not mix banding schemes")
+          storedIdx.refresh(batch)
         }
-      }
-      ()
-    }
+      idx.write(path, batchId = Some(batchId), store = store)
+      true
+    }(HammingIndex.compact(batch.sparkSession, path, retain = 2, store = store))
 }

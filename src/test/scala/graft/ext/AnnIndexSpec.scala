@@ -76,7 +76,7 @@ class AnnIndexSpec extends SparkSpec {
     val dir = java.nio.file.Files.createTempDirectory("annidx").toString
     val idx = AnnIndex.train(day1, m, subDim)
     idx.write(dir)
-    assert(AnnIndex.exists(dir))
+    assert(graft.ops.Segments.exists(dir))
     val r1 = AnnIndex.read(spark, dir)
     assert(r1.m == m && r1.subDim == subDim)
     assert(topk(r1.search(queries, k = 5, nprobe = 2)) ==
@@ -214,7 +214,7 @@ class AnnIndexSpec extends SparkSpec {
         .filter(col("vec_id") === 0).select(col("vec_id") + 100000L,
           col("embedding")).toDF("vec_id", "embedding"),
       dir, 9L, m, subDim)
-    assert(AnnIndex.lastBatchId(dir).contains(9L))
+    assert(graft.ops.Segments.lastBatchId(dir).contains(9L))
   }
 
   test("stale-handle guard: a handle held past the writers' retention " +

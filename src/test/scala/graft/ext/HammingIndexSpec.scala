@@ -48,7 +48,7 @@ class HammingIndexSpec extends SparkSpec {
     assert(graft.ops.Staging.list(s"$dir/segments").toSet ==
       Set("i1", "p1", "i2", "p2"),
       "day-2 commit must add exactly one segment pair")
-    assert(HammingIndex.lastBatchId(dir).contains(1L))
+    assert(graft.ops.Segments.lastBatchId(dir).contains(1L))
     // committed view == an immediate re-open (the write() rule)
     assert(pairSet(committed.pairs) ==
       pairSet(HammingIndex.read(spark, dir).pairs))

@@ -324,7 +324,7 @@ class StagingSpec extends SparkSpec {
       store.releaseLease(dir, "maintainer-A")
       graft.streaming.StreamingNovelty.foldBatch(
         docs, dir, 0L, n = 3, buckets = 8, store = store)
-      assert(graft.ext.NoveltyIndex.exists(dir, store))
+      assert(Segments.exists(dir, store))
       assert(store.lease(dir).isEmpty, "fold must release its lease")
     }
   }
@@ -381,8 +381,8 @@ class StagingSpec extends SparkSpec {
       .write(dir, store = store)
     assert(!Staging.exists(s"$dir/LATEST"),
       "pointer leaked onto the filesystem despite the external store")
-    assert(graft.ext.NoveltyIndex.exists(dir, store))
-    assert(!graft.ext.NoveltyIndex.exists(dir),
+    assert(Segments.exists(dir, store))
+    assert(!Segments.exists(dir),
       "file-store probe must NOT see a JDBC-committed artifact")
     val idx2 = graft.ext.NoveltyIndex.read(spark, dir, store)
     assert(idx2.seen.count() == idx1.seen.count() && idx2.seen.count() > 0)

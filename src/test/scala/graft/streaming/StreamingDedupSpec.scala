@@ -178,7 +178,7 @@ class StreamingDedupSpec extends SparkSpec {
       val vPre = graft.ops.Staging.currentVersion(path)
       StreamingDedup.foldBatch(b.toDF("doc_id", "text"), path, i.toLong,
         compactEvery = k)
-      assert(Maintenance.segmentCount(path,
+      assert(graft.ops.Segments.segmentCount(path,
         Seq("isegs", "psegs", "clsegs")) <= k,
         s"batch $i: segment count exceeded the compaction threshold")
       // fold-current reader contract: a reader that resolved LATEST at
@@ -198,7 +198,7 @@ class StreamingDedupSpec extends SparkSpec {
         .collect().toSet ==
         full.pairs.select("da", "db").as[(Long, Long)].collect().toSet)
       assert(streamed.index.count() == full.index.count())
-      assert(DupGraph.lastBatchId(path).contains(20L),
+      assert(graft.ops.Segments.lastBatchId(path).contains(20L),
         "compaction must preserve the replay guard's batchId")
     } finally full.unpersist()
   }

@@ -1,5 +1,6 @@
 package graft.streaming
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 
@@ -49,21 +50,61 @@ class StreamingIndexesSpec extends SparkSpec {
     assert(viaIdx == direct)
   }
 
-  test("StreamingNovelty replay: exact-last inert, below-stored throws") {
-    val path = java.nio.file.Files.createTempDirectory("snov_rp").toString
-    val Seq(b0, b1) = Seq(1L to 10L, 11L to 20L)
-      .map(ids => mkDocs(ids).toDF("doc_id", "text"))
-    StreamingNovelty.foldBatch(b0, path, 0L, n = 3, buckets = 32)
-    StreamingNovelty.foldBatch(b1, path, 1L, n = 3, buckets = 32)
-    val before = (graft.ops.Staging.currentVersion(path).get,
-      NoveltyIndex.read(spark, path).seen.count())
-    StreamingNovelty.foldBatch(b1, path, 1L, n = 3, buckets = 32) // replay
-    assert((graft.ops.Staging.currentVersion(path).get,
-      NoveltyIndex.read(spark, path).seen.count()) == before)
-    val e = intercept[IllegalStateException] {
-      StreamingNovelty.foldBatch(b0, path, 0L, n = 3, buckets = 32)
+  /** One maintainer's fold of one micro-batch into `path`, the batches
+    * it folds (day 0 and day 1), and a row count of what is stored.
+    */
+  private case class Maintainer(name: String,
+                                      fold: (DataFrame, String, Long) => Unit,
+                                      batches: () => (DataFrame, DataFrame),
+                                      rows: String => Long)
+
+  private lazy val maintainers = Seq(
+    Maintainer("StreamingNovelty",
+      (b, p, id) => StreamingNovelty.foldBatch(b, p, id, n = 3, buckets = 32),
+      () => (mkDocs(1L to 10L).toDF("doc_id", "text"),
+        mkDocs(11L to 20L).toDF("doc_id", "text")),
+      p => NoveltyIndex.read(spark, p).seen.count()),
+    Maintainer("StreamingDedup",
+      (b, p, id) => StreamingDedup.foldBatch(b, p, id),
+      () => (mkDocs(1L to 10L).toDF("doc_id", "text"),
+        mkDocs(11L to 20L).toDF("doc_id", "text")),
+      p => graft.ext.DupGraph.read(spark, p).index.count()),
+    Maintainer("StreamingHamming",
+      (b, p, id) => StreamingHamming.foldBatch(b, p, id),
+      () => {
+        def fps(ids: Seq[Long]) =
+          ids.map(i => (i, graft.ext.Multimodal.targetFp(i))).toDF("doc_id", "fp")
+        (fps(0L until 20L), fps(20L until 40L))
+      },
+      p => graft.ext.HammingIndex.read(spark, p).fingerprints.count()),
+    Maintainer("StreamingAnn",
+      (b, p, id) => StreamingAnn.foldBatch(b, p, id, m = 4, subDim = 16),
+      () => (embScaled.filter(col("vec_id") % 3 =!= 2 || col("vec_id") % 100 === 0),
+        embScaled.filter(col("vec_id") % 3 === 2 && col("vec_id") % 100 =!= 0)),
+      p => AnnIndex.read(spark, p).codes.count()))
+
+  // the committed version, its whole manifest (segment lists, the
+  // last-applied batch id) and what it stores
+  private def committed(mt: Maintainer, path: String) = {
+    val v = graft.ops.Staging.currentVersion(path).get
+    (v, graft.ops.Staging.readManifest(graft.ops.Staging.versionDir(path, v)),
+      mt.rows(path))
+  }
+
+  maintainers.foreach { mt =>
+    test(s"${mt.name} replay: exact-last inert, below-stored throws") {
+      val path = java.nio.file.Files.createTempDirectory(s"rp_${mt.name}").toString
+      val (b0, b1) = mt.batches()
+      mt.fold(b0, path, 0L)
+      mt.fold(b1, path, 1L)
+      val before = committed(mt, path)
+      assert(before._2.get("batchId").contains("1"), before)
+      mt.fold(b1, path, 1L) // replay
+      assert(committed(mt, path) == before)
+      val e = intercept[IllegalStateException](mt.fold(b0, path, 0L))
+      assert(e.getMessage.contains("checkpoint"), e.getMessage)
+      assert(committed(mt, path) == before)
     }
-    assert(e.getMessage.contains("checkpoint"), e.getMessage)
   }
 
   private lazy val embScaled = spark.read
@@ -145,13 +186,13 @@ class StreamingIndexesSpec extends SparkSpec {
     val path = java.nio.file.Files.createTempDirectory("sann_empty").toString
     val empty = embScaled.filter(col("vec_id") < 0)
     StreamingAnn.foldBatch(empty, path, 0L, m = 4, subDim = 16)
-    assert(!AnnIndex.exists(path), "empty bootstrap batch must not commit")
+    assert(!graft.ops.Segments.exists(path), "empty bootstrap batch must not commit")
     // replay of the skipped batch is a harmless re-skip
     StreamingAnn.foldBatch(empty, path, 0L, m = 4, subDim = 16)
-    assert(!AnnIndex.exists(path))
+    assert(!graft.ops.Segments.exists(path))
     StreamingAnn.foldBatch(embScaled.filter(col("vec_id") < 100), path, 1L,
       m = 4, subDim = 16)
-    assert(AnnIndex.exists(path) && AnnIndex.lastBatchId(path).contains(1L))
+    assert(graft.ops.Segments.exists(path) && graft.ops.Segments.lastBatchId(path).contains(1L))
     assert(AnnIndex.read(spark, path).centroids.count() > 0)
   }
 
@@ -181,7 +222,7 @@ class StreamingIndexesSpec extends SparkSpec {
     batches.zipWithIndex.foreach { case (b, i) =>
       StreamingNovelty.foldBatch(b.toDF("doc_id", "text"), path, i.toLong,
         n = 3, buckets = 8, compactEvery = k)
-      assert(Maintenance.segmentCount(path, Seq("ssegs")) <= k,
+      assert(graft.ops.Segments.segmentCount(path, Seq("ssegs")) <= k,
         s"batch $i: segment count exceeded the compaction threshold")
     }
     val idx = NoveltyIndex.read(spark, path)
@@ -191,7 +232,7 @@ class StreamingIndexesSpec extends SparkSpec {
       .distinct().count()
     assert(idx.seen.count() == expect)
     // compaction preserved the replay guard (manifest batchId survives)
-    assert(NoveltyIndex.lastBatchId(path).contains(20L))
+    assert(graft.ops.Segments.lastBatchId(path).contains(20L))
     // and a fresh batch still scores identically to the direct path
     val b = mkDocs(400L to 405L).toDF("doc_id", "text")
     assert(idx.novelty(b, col("text"), col("doc_id"))
@@ -297,7 +338,7 @@ class StreamingIndexesSpec extends SparkSpec {
       val vPre = graft.ops.Staging.currentVersion(path)
       StreamingAnn.foldBatch(b, path, i.toLong, m = 4, subDim = 16,
         compactEvery = k)
-      assert(Maintenance.segmentCount(path, Seq("csegs")) <= k,
+      assert(graft.ops.Segments.segmentCount(path, Seq("csegs")) <= k,
         s"batch $i: segment count exceeded the compaction threshold")
       // fold-current reader survives a double-commit trigger fold
       vPre.foreach(v => assert(graft.ops.Staging.exists(
@@ -305,7 +346,7 @@ class StreamingIndexesSpec extends SparkSpec {
         s"batch $i: fold-current reader's version v$v was collected"))
     }
     val idx = AnnIndex.read(spark, path)
-    assert(AnnIndex.lastBatchId(path).contains(19L))
+    assert(graft.ops.Segments.lastBatchId(path).contains(19L))
     val union = Similarity.withNorm(embScaled, col("vec_id"), col("embedding"))
     val full = AnnIndex.encode(union, idx.centroids, idx.pqCent, 4, 16)
     assert(idx.codes.select("vec_id", "icell", "s", "cid")
@@ -328,14 +369,14 @@ class StreamingIndexesSpec extends SparkSpec {
       val vPre = graft.ops.Staging.currentVersion(path)
       StreamingHamming.foldBatch(b, path, i.toLong, buckets = 8,
         compactEvery = k)
-      assert(Maintenance.segmentCount(path, Seq("isegs", "psegs")) <= k,
+      assert(graft.ops.Segments.segmentCount(path, Seq("isegs", "psegs")) <= k,
         s"batch $i: segment count exceeded the compaction threshold")
       // fold-current reader survives a double-commit trigger fold
       vPre.foreach(v => assert(graft.ops.Staging.exists(
         graft.ops.Staging.versionDir(path, v)),
         s"batch $i: fold-current reader's version v$v was collected"))
     }
-    assert(HammingIndex.lastBatchId(path).contains(17L))
+    assert(graft.ops.Segments.lastBatchId(path).contains(17L))
     // exact-last replay is inert; an id below the stored one throws
     val vEnd = graft.ops.Staging.currentVersion(path)
     StreamingHamming.foldBatch(fps(170L until 180L), path, 17L, buckets = 8)
