@@ -112,9 +112,13 @@ object Layout {
     * entry at write time, so this routes through a transient
     * external-table name and drops the entry afterwards (external drop
     * keeps the files; the bucket ids live in the file NAMES, which is
-    * what the bucketed read resolves). Pre-partition the input on
-    * `key` with the same bucket count to make each write task emit one
-    * bucket file (no writer-side fan-out).
+    * what the bucketed read resolves). The writer sorts each task's rows
+    * by bucket id, then `key`, and starts a file per bucket it meets, so
+    * a task emits one file per bucket among its rows: give it a
+    * one-partition input (small data, [[Segments.write]] below
+    * [[SmallPlan.fitsOneTask]]) or pre-partition the input on `key`
+    * with the same bucket count (larger data) — either way one file per
+    * bucket, with no writer-side fan-out of tasks × buckets files.
     *
     * The target must not exist (bucketed CTAS refuses a non-empty
     * location): artifact writers route the dir through

@@ -116,25 +116,40 @@ object Segments {
   /** Write `df` as segment `sid` of family `f`. The dir is cleaned first
     * (segment ids are deterministic per version, so this is a
     * crash-retry's own debris; bucketed CTAS refuses a non-empty
-    * location). A bucketed or partitioned write repartitions on its
-    * key first, so each task writes one bucket or cell instead of
-    * fanning out tasks × buckets small files.
+    * location).
+    *
+    * An input that fits one task ([[SmallPlan.fitsOneTask]]: Spark's
+    * size estimate within what AQE's coalescing always merges into one
+    * partition, and no operator that can outgrow its estimate) is
+    * written by one task with no shuffle (`coalesce(1)`): a plain
+    * segment as one file, a bucketed one as one file per bucket (the
+    * writer sorts by bucket id, then `key`, inside the task), a
+    * partitioned one as one file per `key` value. Any other input is
+    * repartitioned on its key first when bucketed or partitioned, so
+    * each task writes one bucket or cell instead of fanning out tasks ×
+    * buckets small files, and a plain one is written one file per input
+    * split. Either way the files lie as the shape's readers expect.
     */
   def write(f: Family, df: DataFrame, root: String, sid: String,
             buckets: Int = 0): Unit = {
     val d = dir(root, sid)
     Staging.deleteTree(d)
+    // `df` in one task when it fits one, else `spread`
+    def tasks(spread: => DataFrame): DataFrame =
+      if (SmallPlan.fitsOneTask(df.queryExecution.sparkPlan,
+          df.sparkSession.sessionState.conf)) df.coalesce(1)
+      else spread
     f.shape match {
-      case Plain => df.write.mode("overwrite").parquet(d)
+      case Plain => tasks(df).write.mode("overwrite").parquet(d)
       case OneFile => df.coalesce(1).write.parquet(d)
       case Bucketed(key) =>
         Layout.dropBucketedEntry(df.sparkSession, d)
         if (buckets > 0)
-          Layout.writeBucketedTable(df.repartition(buckets, col(key)), d, key,
-            buckets)
-        else df.write.mode("overwrite").parquet(d)
+          Layout.writeBucketedTable(tasks(df.repartition(buckets, col(key))), d,
+            key, buckets)
+        else tasks(df).write.mode("overwrite").parquet(d)
       case Partitioned(key) =>
-        df.repartition(col(key)).write.partitionBy(key).parquet(d)
+        tasks(df.repartition(col(key))).write.partitionBy(key).parquet(d)
         // An EMPTY partitioned write leaves no data file (only
         // _SUCCESS), which no later read can open. Empty deltas are
         // legitimate but rare, so detect one from the write's own

@@ -77,7 +77,7 @@ import org.apache.spark.sql.internal.SQLConf
   */
 object SmallPlan extends Rule[SparkPlan] {
 
-  override def apply(plan: SparkPlan): SparkPlan = singleTaskBytes match {
+  override def apply(plan: SparkPlan): SparkPlan = singleTaskBytes(conf) match {
     case None => plan
     case Some(limit) =>
       val shared = plan.collect {
@@ -85,7 +85,7 @@ object SmallPlan extends Rule[SparkPlan] {
         case s: QueryStageExec => s.canonicalized
         case r: ReusedExchangeExec => r.canonicalized
       }.groupBy(identity).collect { case (c, cs) if cs.size > 1 => c }.toSet
-      def fits(p: SparkPlan): Boolean = bounded(p) && small(p, limit)
+      def fits(p: SparkPlan): Boolean = fitsWithin(p, limit)
       def single(p: SparkPlan): SparkPlan =
         if (p.outputPartitioning == SinglePartition) p else CoalesceExec(1, p)
       // `p` without its small hash or single-partition exchange (directly
@@ -131,12 +131,23 @@ object SmallPlan extends Rule[SparkPlan] {
         .getOrElse(plan)
   }
 
-  /** The largest total shuffle size `CoalesceShufflePartitions` always
-    * merges into one partition under the session's confs, or None when
-    * it may leave a shuffle as it is.
+  /** Whether `p` fits one task under `c`: the test this rule applies to
+    * an exchange's input (size and operators, see the class doc), for a
+    * caller that plans its own shuffle — [[Segments.write]] writes such
+    * an input with `coalesce(1)` instead of repartitioning it. False
+    * with coalescing or final-stage coalescing off.
     */
-  private def singleTaskBytes: Option[BigInt] = {
-    val c = conf
+  def fitsOneTask(p: SparkPlan, c: SQLConf): Boolean =
+    singleTaskBytes(c).exists(fitsWithin(p, _))
+
+  private def fitsWithin(p: SparkPlan, limit: BigInt): Boolean =
+    bounded(p) && small(p, limit)
+
+  /** The largest total shuffle size `CoalesceShufflePartitions` always
+    * merges into one partition under `c`, or None when it may leave a
+    * shuffle as it is.
+    */
+  private def singleTaskBytes(c: SQLConf): Option[BigInt] = {
     if (!c.coalesceShufflePartitionsEnabled ||
       !c.getConf(SQLConf.ADAPTIVE_EXECUTION_APPLY_FINAL_STAGE_SHUFFLE_OPTIMIZATIONS))
       None
@@ -178,7 +189,12 @@ object SmallPlan extends Rule[SparkPlan] {
     * estimate (see the class doc).
     */
   private def bounded(p: SparkPlan): Boolean = p match {
-    case _: QueryStageExec | _: ReusedExchangeExec => true
+    // a stage's estimate is exact only once it is materialized; before
+    // that it is the estimate of the plan it runs, which must keep its
+    // output within it like any other input (else whether an exchange
+    // stays would depend on which stage AQE saw finish first)
+    case s: QueryStageExec => s.isMaterialized || bounded(s.plan)
+    case r: ReusedExchangeExec => bounded(r.child)
     case _: DataSourceScanExec | _: BatchScanExec | _: InMemoryTableScanExec |
          _: LocalTableScanExec | _: RangeExec | _: ProjectExec | _: FilterExec |
          _: BaseAggregateExec | _: WindowExec | _: WindowGroupLimitExec |

@@ -312,4 +312,26 @@ class SmallPlanSpec extends SparkSpec {
     assert(Tables.parquet(spark, out).inputFiles.length == 1)
     assert(Tables.parquet(spark, out).collect().toSeq == expected)
   }
+
+  test("a query stage still running is judged by the operators it runs: an " +
+      "explode under it keeps the exchange above it whichever stage AQE " +
+      "sees finish first") {
+    // the explode stage is slow, so AQE re-plans once the fast stage is
+    // done and the explode stage is not; its logical estimate (a few
+    // hundred bytes) is under the limit, its runtime size (~16 KB) is not
+    val slow = udf((x: Long) => { if (x == 0) Thread.sleep(1500); x })
+    val fanOut = spark.range(0, 50, 1, 2)
+      .select(explode(sequence(col("id") * 20, col("id") * 20 + 19)).as("k"))
+      .select(slow(col("k")).as("k"))
+      .repartition(4, col("k"))
+      .groupBy((col("k") % 3).as("g")).agg(count(lit(1)).as("n"))
+    val fast = spark.range(0, 10, 1, 2).repartition(2, col("id"))
+      .select(col("id").as("g"), lit(1L).as("n"))
+    val key = "spark.sql.adaptive.coalescePartitions.minPartitionSize"
+    spark.conf.set(key, "4k")
+    val (rows, _, plan) = try run(fanOut.unionByName(fast)) finally spark.conf.unset(key)
+    assert(!plan.contains("Coalesce"), plan)
+    assert(canonical(rows) == canonical(
+      Seq(Row(0L, 334L), Row(1L, 333L), Row(2L, 333L)) ++ (0L until 10L).map(Row(_, 1L))))
+  }
 }

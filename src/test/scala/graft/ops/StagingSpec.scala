@@ -409,4 +409,52 @@ class StagingSpec extends SparkSpec {
     assert(!Staging.exists(s"$root/src"))
     assert(!Files.exists(Paths.get(s"$root/src")))
   }
+
+  test("file systems resolve through the session's Hadoop conf: a session " +
+      "fs.* key and a change to the SparkContext's Hadoop conf count at " +
+      "once, a session spark.hadoop.* key counts exactly as newHadoopConf " +
+      "counts it") {
+    val dir = tmp("stg_conf")
+    Staging.writeString(s"$dir/x", "1")
+    val x = s"${SchemeFs.Scheme}://$dir/x"
+    val impl = s"fs.${SchemeFs.Scheme}.impl"
+    // uncached, so every call resolves the scheme through the conf it gets
+    val uncached = s"fs.${SchemeFs.Scheme}.impl.disable.cache"
+    def resolves: Boolean = scala.util.Try(Staging.exists(x)).toOption.contains(true)
+    val hc = spark.sparkContext.hadoopConfiguration
+    // only spark.* keys on the session: the SparkContext's conf, no copy
+    assert(Staging.conf eq hc)
+    assert(!resolves)
+
+    spark.conf.set(impl, classOf[SchemeFs].getName)
+    spark.conf.set(uncached, "true")
+    try {
+      assert(!(Staging.conf eq hc))
+      assert(resolves && Staging.readString(x) == "1")
+    } finally { spark.conf.unset(impl); spark.conf.unset(uncached) }
+    assert(!resolves)
+
+    spark.conf.set(s"spark.hadoop.$impl", classOf[SchemeFs].getName)
+    try {
+      val viaSession = scala.util.Try(new org.apache.hadoop.fs.Path(x)
+        .getFileSystem(spark.sessionState.newHadoopConf()).exists(new org.apache.hadoop.fs.Path(x)))
+      assert(resolves == viaSession.toOption.contains(true))
+    } finally spark.conf.unset(s"spark.hadoop.$impl")
+
+    hc.set(impl, classOf[SchemeFs].getName)
+    hc.set(uncached, "true")
+    try assert(resolves)
+    finally { hc.unset(impl); hc.unset(uncached) }
+    assert(!resolves)
+  }
+}
+
+/** The local file system under its own scheme. */
+class SchemeFs extends org.apache.hadoop.fs.RawLocalFileSystem {
+  override def getUri: java.net.URI = java.net.URI.create(s"${SchemeFs.Scheme}:///")
+  override def getScheme: String = SchemeFs.Scheme
+}
+
+object SchemeFs {
+  val Scheme = "graftstg"
 }
