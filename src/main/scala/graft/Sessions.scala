@@ -4,7 +4,7 @@ import org.apache.spark.sql.SparkSession
 
 /** The ONE session recipe for running this engine — the conf posture
   * every graft session needs, whoever builds it (the bench, the
-  * verifier, the measurement probes, a library consumer's own main).
+  * verifier, the tool mains, a library consumer's own main).
   * Round 19 left these confs duplicated across harness mains only; a
   * consumer building a bare `SparkSession` silently got the 100-entry
   * codegen cache and committer v1 back. One audited copy here.
@@ -17,8 +17,7 @@ import org.apache.spark.sql.SparkSession
   *    few hundred distinct operators holds a few THOUSAND codegen
   *    units, so the default thrashes and every re-execution re-pays
   *    full Janino compilation — pure driver overhead at any data
-  *    scale (measured −25% on the 228-query bench). Env-overridable
-  *    via `SPARK_GRAFT_CODEGEN_CACHE`.
+  *    scale (measured −25% on the 228-query bench).
   *  - job-commit algorithm 2: task output reaches the destination at
   *    TASK commit, so job commit stops serially renaming every file
   *    on the driver. Safe engine-wide because result visibility is
@@ -65,13 +64,27 @@ import org.apache.spark.sql.SparkSession
   */
 object Sessions {
 
+  /** `spark`'s Hadoop conf as `newHadoopConf()` builds it — the
+    * SparkContext's Hadoop conf with every session conf set on top —
+    * without copying its ~1,100 entries on every call when the session
+    * sets only `spark.*` keys: Hadoop reads none of those, so the
+    * SparkContext's own conf (live, so later changes to it count) is
+    * the same conf to a `FileSystem`. A session that sets any other key
+    * (`fs.*`, `hadoop.*`, …) gets the copy. The one rule of every
+    * file-system and footer call of the engine ([[graft.ops.Staging]],
+    * [[graft.model.Tables]]).
+    */
+  def hadoopConf(spark: SparkSession): org.apache.hadoop.conf.Configuration =
+    if (spark.sessionState.conf.getAllConfs.keysIterator.forall(_.startsWith("spark.")))
+      spark.sparkContext.hadoopConfiguration
+    else spark.sessionState.newHadoopConf()
+
   /** Apply the engine conf posture to any builder (library-consumer
     * surface — compose with your own master/memory/catalog confs).
     */
   def tuned(b: SparkSession.Builder): SparkSession.Builder = b
     .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.sql.codegen.cache.maxEntries",
-      sys.env.getOrElse("SPARK_GRAFT_CODEGEN_CACHE", "8192"))
+    .config("spark.sql.codegen.cache.maxEntries", "8192")
     .config("spark.hadoop.mapreduce.fileoutputcommitter.algorithm.version",
       "2")
     .config("spark.hadoop.fs.file.impl", "graft.ops.NioLocalFileSystem")

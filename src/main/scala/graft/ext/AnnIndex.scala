@@ -4,7 +4,6 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.ops.{Segments, Windows}
-import graft.model.Tables
 
 /** Durable IVF-PQ ANN index — the production lifecycle around
   * [[Similarity]]'s in-plan components ([[Similarity.kmeansRefine]],
@@ -176,7 +175,7 @@ final class AnnIndex private[ext] (
     // a lineage-rooted commit re-REFERENCES stored segments instead of
     // rewriting them, catalogs included: the stale-handle guard covers all
     val c = Segments.begin(AnnIndex.Artifact, path, store,
-      lin.toSeq.flatMap(l => l.csegs ++ l.centSeg ++ l.pqSeg))
+      lin.toSeq.flatMap(l => l.csegs :+ l.centSeg :+ l.pqSeg))
     // one concurrent batch for everything this commit must put on
     // disk: the code segment plus (fresh-train generations only) the
     // two catalog segments — they share only immutable lazy-checkpoint
@@ -187,8 +186,8 @@ final class AnnIndex private[ext] (
       case Some(l) => l.csegs :+ c.add(Codes, l.deltas.map(_()).reduce(_.unionByName(_)))
       case None => Seq(c.add(Codes, codes))
     }
-    val (centSeg, pqSeg) = lin.flatMap(l => l.centSeg.zip(l.pqSeg)) // frozen: reuse
-      .getOrElse((c.add(Cent, centroids), c.add(Pq, pqCent)))
+    val (centSeg, pqSeg) = lin.fold( // frozen: reuse
+      (c.add(Cent, centroids), c.add(Pq, pqCent)))(l => (l.centSeg, l.pqSeg))
     c.publish(Map("m" -> m.toString, "subDim" -> subDim.toString,
       "fmt" -> AnnIndex.FormatVersion, "csegs" -> csegs.mkString(","),
       "centseg" -> centSeg, "pqseg" -> pqSeg) ++
@@ -196,8 +195,8 @@ final class AnnIndex private[ext] (
     new AnnIndex(centroids, pqCent,
       () => csegs.map(sid => AnnIndex.openCodes(centroids.sparkSession, path, sid)),
       m, subDim,
-      lineage = Some(AnnIndex.Lineage(path, csegs, Some(centSeg),
-        Some(pqSeg), deltas = Seq.empty)))
+      lineage = Some(AnnIndex.Lineage(path, csegs, centSeg, pqSeg,
+        deltas = Seq.empty)))
   }
 }
 
@@ -211,8 +210,8 @@ object AnnIndex {
 
   private[ext] final case class Lineage(root: String,
                                         csegs: Seq[String],
-                                        centSeg: Option[String],
-                                        pqSeg: Option[String],
+                                        centSeg: String,
+                                        pqSeg: String,
                                         deltas: Seq[() => DataFrame])
 
   /** Code segments, one per ingest, PARTITIONED BY `icell` so a probe
@@ -228,7 +227,8 @@ object AnnIndex {
   private val Pq = Segments.Family("pqseg", "b", Segments.OneFile)
 
   private[graft] val Artifact =
-    Segments.Kind("ANN index", "AnnIndex", "fmt", FormatVersion, Codes, Cent, Pq)
+    Segments.Kind("ANN index", "AnnIndex", "fmt", FormatVersion,
+      Seq("m", "subDim"), Codes, Cent, Pq)
 
   private def openCodes(spark: SparkSession, root: String,
                         sid: String): DataFrame =
@@ -311,8 +311,11 @@ object AnnIndex {
       .select(col("vec_id"), col("icell"), col("s"), col("cid"))
   }
 
-  /** Re-open the LATEST committed version. Parameters come from the
-    * manifest; a format mismatch fails loudly. The usual
+  /** Re-open the LATEST committed version. Parameters and the
+    * catalog and code segments come from the manifest; a manifest of
+    * another format or without any of them (per-version catalog dirs
+    * from before the shared catalog segments included) is refused with
+    * a rebuild error ([[Segments.resolve]]). The usual
     * versioned-pointer reader-lifetime contract applies
     * ([[DupGraph.read]]).
     */
@@ -320,26 +323,15 @@ object AnnIndex {
            store: graft.ops.PointerStore =
              graft.ops.PointerStore.File): AnnIndex = {
     val v = Segments.resolve(Artifact, path, store)
-    val csegs = v.segs("csegs")
+    val (csegs, mf) = (v.segs("csegs"), v.manifest)
     new AnnIndex(
-      catalog(spark, path, v, Cent, "centroids"),
-      catalog(spark, path, v, Pq, "pqcent"),
+      Segments.open(spark, Cent, path, mf(Cent.key)),
+      Segments.open(spark, Pq, path, mf(Pq.key)),
       () => csegs.map(sid => openCodes(spark, path, sid)),
-      m = v.manifest("m").toInt, subDim = v.manifest("subDim").toInt,
-      lineage = Some(Lineage(path, csegs, v.manifest.get("centseg"),
-        v.manifest.get("pqseg"), deltas = Seq.empty)))
+      m = mf("m").toInt, subDim = mf("subDim").toInt,
+      lineage = Some(Lineage(path, csegs, mf(Cent.key), mf(Pq.key),
+        deltas = Seq.empty)))
   }
-
-  /** A catalog: segment-shared since the commit-floor trim (manifest
-    * keys centseg/pqseg); a per-version table dir on legacy artifacts —
-    * those upgrade to catalog segments on the next commit.
-    */
-  private def catalog(spark: SparkSession, path: String, v: Segments.Version,
-                      f: Segments.Family, legacyDir: String): DataFrame =
-    v.manifest.get(f.key) match {
-      case Some(sid) => Segments.open(spark, f, path, sid)
-      case None => Tables.parquet(spark, s"${v.dir}/$legacyDir")
-    }
 
   /** Retrain the artifact at `path` from the current corpus VECTORS
     * (supplied by the caller — PQ codes are lossy, so the vectors come
@@ -390,13 +382,8 @@ object AnnIndex {
     if (csegs.size <= 1) return
     val c = Segments.begin(Artifact, path, store)
     val cs = c.add(Codes, csegs.map(openCodes(spark, path, _)).reduce(_.unionByName(_)))
-    // catalogs: carry the segment references forward (frozen between
-    // retrains — compaction folds only code segments); a legacy
-    // artifact's per-version catalog dirs upgrade to segments here
-    val cats = Seq(Cent -> "centroids", Pq -> "pqcent").map { case (f, legacy) =>
-      f.key -> v0.manifest.getOrElse(f.key,
-        c.add(f, Tables.parquet(spark, s"${v0.dir}/$legacy")))
-    }
-    c.publish(v0.manifest ++ Map("csegs" -> cs) ++ cats, retain)
+    // the catalog segments carry forward as they are: frozen between
+    // retrains, compaction folds only code segments
+    c.publish(v0.manifest + ("csegs" -> cs), retain)
   }
 }

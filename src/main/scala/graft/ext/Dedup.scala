@@ -571,24 +571,13 @@ object Dedup {
   def refreshDupGraph(stored: DupGraph, newDocs: DataFrame, text: Column,
                       id: Column, n: Int = -1,
                       threshold: Double = -1.0): DupGraph = {
-    // Manifest-backed graphs validate caller parameters against the
-    // recorded build values. For a PRE-MANIFEST artifact the stored
-    // values are library-default guesses — the caller is the only
-    // authority on what the artifact was actually built with, so their
-    // explicit parameters win (rejecting them against a guess would
-    // make a correctly-parameterized legacy graph un-refreshable).
-    if (stored.paramsDeclared) {
-      require(n == -1 || n == stored.n,
-        s"refresh shingle width $n != stored graph's ${stored.n} " +
-          "(mixing widths joins incompatible shingle spaces)")
-      require(threshold == -1.0 || threshold == stored.threshold,
-        s"refresh threshold $threshold != stored graph's ${stored.threshold} " +
-          "(mixing thresholds breaks refresh == rebuild)")
-    }
-    val nn = if (!stored.paramsDeclared && n != -1) n else stored.n
-    val tt = if (!stored.paramsDeclared && threshold != -1.0) threshold
-             else stored.threshold
-    val shNew = shingleIndex(newDocs, text, id, nn).persist()
+    require(n == -1 || n == stored.n,
+      s"refresh shingle width $n != stored graph's ${stored.n} " +
+        "(mixing widths joins incompatible shingle spaces)")
+    require(threshold == -1.0 || threshold == stored.threshold,
+      s"refresh threshold $threshold != stored graph's ${stored.threshold} " +
+        "(mixing thresholds breaks refresh == rebuild)")
+    val shNew = shingleIndex(newDocs, text, id, stored.n).persist()
     // Cross pairs are computed PER STORED SEGMENT: every document's
     // shingles live wholly inside its arrival segment, so a (new, old)
     // pair's intersection count is complete within the old doc's
@@ -597,9 +586,9 @@ object Dedup {
     // is shared across all of them (ReusedExchange).
     val crossPairs = stored.indexSegs
       .map(seg => jaccardFromIntersections(
-        indexCrossIntersections(shNew, seg), tt))
+        indexCrossIntersections(shNew, seg), stored.threshold))
       .reduce(_.unionByName(_))
-    val newPairs = jaccardFromIntersections(indexSelfIntersections(shNew), tt)
+    val newPairs = jaccardFromIntersections(indexSelfIntersections(shNew), stored.threshold)
       .unionByName(crossPairs)
       .persist()
     val seedEdges = stored.clusters
@@ -627,12 +616,7 @@ object Dedup {
       .select(col("doc_id"), col("cluster_id"))
     new DupGraph(stored.pairs.unionByName(newPairs), clusters,
       () => stored.indexSegs :+ shNew, owned = Seq(newPairs, shNew),
-      n = nn, threshold = tt,
-      // a refresh of a pre-manifest graph stays UNDECLARED unless the
-      // caller supplied both parameters explicitly — otherwise a later
-      // write would stamp guesses into the manifest as truth
-      paramsDeclared = stored.paramsDeclared ||
-        (n != -1 && threshold != -1.0),
+      n = stored.n, threshold = stored.threshold,
       // thread the durable ancestry through: a later write() back to
       // the same root commits ONLY these deltas as new segments
       lineage = stored.lineage.map(l => l.copy(
@@ -1272,14 +1256,6 @@ final class DupGraph private[ext] (val pairs: DataFrame,
                                    owned: Seq[DataFrame],
                                    val n: Int,
                                    val threshold: Double,
-                                   /** False only for a graph read from a
-                                     * pre-manifest artifact: `n` and
-                                     * `threshold` are then library-default
-                                     * GUESSES, and refresh lets explicit
-                                     * caller parameters override them
-                                     * instead of validating against a
-                                     * guess. */
-                                   private[ext] val paramsDeclared: Boolean = true,
                                    /** Durable ancestry: set iff this graph
                                      * is backed by a stored artifact, so
                                      * [[write]] back to the same root can
@@ -1309,7 +1285,7 @@ final class DupGraph private[ext] (val pairs: DataFrame,
     * pipeline writes day-1's graph once; day-2 reads it back
     * ([[DupGraph.read]]) and folds the new batch in with
     * [[Dedup.refreshDupGraph]] — the stored corpus is never
-    * re-enumerated, and (new in r15) never re-WRITTEN either.
+    * re-enumerated, and never re-WRITTEN either.
     *
     * ==Segment-incremental commits (the 100 TB commit cost)==
     * A graph whose [[lineage]] roots at this same `path` (read here,
@@ -1380,30 +1356,14 @@ final class DupGraph private[ext] (val pairs: DataFrame,
           else (l.isegs :+ c.add(Idx, l.deltaIdx.map(_()).reduce(_.unionByName(_)),
             l.buckets), l.psegs :+ c.add(Prs, l.deltaPrs.reduce(_.unionByName(_))))
         val cl2 =
-          // upgrading an artifact whose clusters still live in a
-          // version DIR (r15-early layout): that dir ages out with
-          // retention, so the FULL current view must become the base
-          // layer — a delta alone would orphan every base assignment
-          if (l.clsegs.isEmpty) Seq(c.add(Clusters, clusters))
-          else if (l.deltaCls.nonEmpty)
-            l.clsegs :+ c.add(Clusters, l.deltaCls.reduce(_.unionByName(_)))
-          else l.clsegs
+          if (l.deltaCls.isEmpty) l.clsegs
+          else l.clsegs :+ c.add(Clusters, l.deltaCls.reduce(_.unionByName(_)))
         (is2, ps2, cl2, l.buckets)
       case None => // full commit: the whole graph as one segment triple
         (Seq(c.add(Idx, index, buckets)), Seq(c.add(Prs, pairs)),
           Seq(c.add(Clusters, clusters)), buckets)
     }
-    // A pre-manifest graph's n/threshold are library-default GUESSES —
-    // stamping them into the new manifest would promote the guess to a
-    // declared value, permanently rejecting the caller's correct
-    // explicit parameters on every later refresh (and silently joining
-    // mixed shingle spaces on a param-less one). Undeclared stays
-    // undeclared until a refresh with explicit parameters declares it.
-    val params: Map[String, String] =
-      if (paramsDeclared)
-        Map("n" -> n.toString, "threshold" -> threshold.toString)
-      else Map.empty
-    c.publish(params ++ Map(
+    c.publish(Map("n" -> n.toString, "threshold" -> threshold.toString,
       "hash" -> DupGraph.HashVersion, "buckets" -> b.toString,
       "isegs" -> isegs.mkString(","), "psegs" -> psegs.mkString(","),
       "clsegs" -> clsegs.mkString(",")) ++
@@ -1479,7 +1439,8 @@ object DupGraph {
   private val Clusters = graft.ops.Segments.Family("clsegs", "k")
 
   private[graft] val Artifact = graft.ops.Segments.Kind("dup-graph",
-    "DupGraph", "hash", HashVersion, Idx, Prs, Clusters)
+    "DupGraph", "hash", HashVersion, Seq("n", "threshold", "buckets"),
+    Idx, Prs, Clusters)
 
   /** Fold a multi-segment artifact back to one segment TRIPLE: union
     * all index segments into ONE bucketed segment, all pairs segments
@@ -1490,7 +1451,8 @@ object DupGraph {
     * operator's schedule, exactly like any LSM/Delta compaction. After
     * the commit, old segments age out with their referencing versions
     * (the usual retention sweep). No-op when already compact (unless
-    * `keepPairs = false` still has pairs to prune).
+    * `keepPairs = false` still has pairs to prune). A version [[read]]
+    * would refuse is refused here too, before anything is written.
     *
     * `keepPairs = false` PRUNES the pairs table down to its (empty,
     * schema-bearing) shell: pairs are the raw near-dup evidence, but
@@ -1515,12 +1477,6 @@ object DupGraph {
     val v0 = graft.ops.Segments.resolve(Artifact, path, store, "compact")
     val (isegs, psegs, clsegs) =
       (v0.segs("isegs"), v0.segs("psegs"), v0.segs("clsegs"))
-    // legacy pre-segmented layout (no isegs/psegs/clsegs keys — a
-    // single version dir holding index/pairs/clusters directly, which
-    // read() still supports): nothing to fold and nothing whose bytes
-    // grow with ingests, so compaction is a no-op rather than a crash
-    // on reduce-of-empty below
-    if (isegs.isEmpty) return
     val compactAlready =
       isegs.size <= 1 && psegs.size <= 1 && clsegs.size <= 1
     if (keepPairs && compactAlready) return
@@ -1529,9 +1485,9 @@ object DupGraph {
     // row counts, read on the driver: no Spark job) — a scheduled
     // periodic prune must not pay a full corpus rewrite for zero effect
     // every time
-    if (!keepPairs && compactAlready && psegs.nonEmpty &&
+    if (!keepPairs && compactAlready &&
       Tables.rowCount(spark, graft.ops.Segments.dir(path, psegs.head)) == 0) return
-    val buckets = v0.manifest.get("buckets").map(_.toInt).getOrElse(0)
+    val buckets = v0.manifest("buckets").toInt
     val c = graft.ops.Segments.begin(Artifact, path, store)
     val foldedPairs = graft.ops.Segments.union(spark, path, psegs)
     // the three rewrites read disjoint stored segments (run
@@ -1544,9 +1500,7 @@ object DupGraph {
     val segs = Map(
       "isegs" -> c.add(Idx, graft.ops.Segments.union(spark, path, isegs), buckets),
       "psegs" -> c.add(Prs, if (keepPairs) foldedPairs else foldedPairs.limit(0)),
-      "clsegs" -> c.add(Clusters,
-        if (clsegs.nonEmpty) effectiveClusters(spark, path, clsegs)
-        else Tables.parquet(spark, s"${v0.dir}/clusters"))) // r15-early layout
+      "clsegs" -> c.add(Clusters, effectiveClusters(spark, path, clsegs)))
     c.publish(v0.manifest ++ segs, retain)
   }
 
@@ -1565,13 +1519,10 @@ object DupGraph {
     * [[DupGraph.write]]. Nothing is cached on read (parquet scans are
     * already cheap and columnar); [[Dedup.refreshDupGraph]] reads the
     * index side exactly once per batch. Build parameters, the bucket
-    * layout, and the segment lists come from the version manifest;
-    * artifacts from before the segmented layout (no `isegs` key) read
-    * through their legacy single-dir tables (and upgrade to segments
-    * on their next full write — a legacy version dir cannot serve as
-    * an immutable segment because retention deletes it). Versions
-    * predating manifests entirely fall back to the library defaults
-    * n=3, threshold=0.5, plain parquet. Throws if no version was ever
+    * layout, and the segment lists come from the version manifest; a
+    * version whose manifest lacks any of them (a layout from before the
+    * segmented one) is refused with a rebuild error
+    * ([[graft.ops.Segments.resolve]]). Throws if no version was ever
     * committed (use [[graft.ops.Segments.exists]] to probe).
     *
     * ==Reader lifetime contract==
@@ -1587,47 +1538,25 @@ object DupGraph {
            store: graft.ops.PointerStore =
              graft.ops.PointerStore.File): DupGraph = {
     val v = graft.ops.Segments.resolve(Artifact, path, store)
-    val (dir, mf) = (v.dir, v.manifest)
-    val buckets = mf.get("buckets").map(_.toInt).getOrElse(0)
-    // cluster table: layered delta segments (min-per-doc effective
-    // view) when the manifest lists them; the per-version table dir
-    // for r15-early and legacy artifacts. Deliberately a PURE lazy
-    // view, not checkpointed/persisted: a read handle can outlive
-    // executors (dynamic allocation) and is re-read every micro-batch
-    // by the streaming loop — truncated lineage would break on
-    // executor loss inside the promised reader-lifetime window, and
-    // per-read blocks have no deterministic release. Each action pays
-    // one union+min-aggregate over the layers; layer count is bounded
-    // by batches-since-[[compact]], which is the documented lever.
-    val clsegs = v.segs("clsegs")
-    val clusters =
-      if (clsegs.nonEmpty) effectiveClusters(spark, path, clsegs)
-      else Tables.parquet(spark, s"$dir/clusters")
-    val n = mf.get("n").map(_.toInt).getOrElse(3)
-    val threshold = mf.get("threshold").map(_.toDouble).getOrElse(0.5)
-    // pre-manifest artifacts carry GUESSED defaults — flag them so
-    // refresh trusts explicit caller parameters instead of rejecting
-    // them against the guess
-    val declared = mf.contains("n") && mf.contains("threshold")
-    mf.get("isegs") match {
-      case Some(_) => // segmented layout
-        val (isegs, psegs) = (v.segs("isegs"), v.segs("psegs"))
-        new DupGraph(
-          graft.ops.Segments.union(spark, path, psegs),
-          clusters,
-          () => isegs.map(graft.ops.Segments.open(spark, Idx, path, _, buckets)),
-          owned = Seq.empty, // a read graph owns no caches
-          n = n, threshold = threshold, paramsDeclared = declared,
-          lineage = Some(Lineage(path, isegs, psegs, clsegs, buckets,
-            deltaIdx = Seq.empty, deltaPrs = Seq.empty,
-            deltaCls = Seq.empty)))
-      case None => // legacy single-dir layout
-        new DupGraph(
-          Tables.parquet(spark, s"$dir/pairs"),
-          clusters,
-          () => Seq(graft.ops.Segments.openAt(spark, Idx, s"$dir/index", buckets)),
-          owned = Seq.empty,
-          n = n, threshold = threshold, paramsDeclared = declared)
-    }
+    val mf = v.manifest
+    val buckets = mf("buckets").toInt
+    val (isegs, psegs, clsegs) = (v.segs("isegs"), v.segs("psegs"), v.segs("clsegs"))
+    new DupGraph(
+      graft.ops.Segments.union(spark, path, psegs),
+      // the layered cluster deltas' min-per-doc view. Deliberately a
+      // PURE lazy view, not checkpointed/persisted: a read handle can
+      // outlive executors (dynamic allocation) and is re-read every
+      // micro-batch by the streaming loop — truncated lineage would
+      // break on executor loss inside the promised reader-lifetime
+      // window, and per-read blocks have no deterministic release. Each
+      // action pays one union+min-aggregate over the layers; layer
+      // count is bounded by batches-since-[[compact]], which is the
+      // documented lever.
+      effectiveClusters(spark, path, clsegs),
+      () => isegs.map(graft.ops.Segments.open(spark, Idx, path, _, buckets)),
+      owned = Seq.empty, // a read graph owns no caches
+      n = mf("n").toInt, threshold = mf("threshold").toDouble,
+      lineage = Some(Lineage(path, isegs, psegs, clsegs, buckets,
+        deltaIdx = Seq.empty, deltaPrs = Seq.empty, deltaCls = Seq.empty)))
   }
 }

@@ -165,7 +165,8 @@ object HammingIndex {
   private val Prs = Segments.Family("psegs", "p")
 
   private[graft] val Artifact =
-    Segments.Kind("hamming index", "HammingIndex", "fmt", FormatVersion, Idx, Prs)
+    Segments.Kind("hamming index", "HammingIndex", "fmt", FormatVersion,
+      Seq("maxDist", "bands", "bits", "buckets"), Idx, Prs)
 
   private[ext] final case class Lineage(root: String,
                                         isegs: Seq[String],

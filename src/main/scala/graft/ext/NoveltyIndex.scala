@@ -109,7 +109,8 @@ object NoveltyIndex {
   private val Segs = Segments.Family("ssegs", "s", Segments.Bucketed("sh"))
 
   private[graft] val Artifact =
-    Segments.Kind("novelty index", "NoveltyIndex", "hash", HashVersion, Segs)
+    Segments.Kind("novelty index", "NoveltyIndex", "hash", HashVersion,
+      Seq("n", "buckets"), Segs)
 
   private[ext] final case class Lineage(root: String,
                                         ssegs: Seq[String],

@@ -102,7 +102,7 @@ object Tables {
     *     `spark.read.parquet` does.
     */
   def parquet(spark: SparkSession, path: String): DataFrame = {
-    val conf = spark.sessionState.newHadoopConf()
+    val conf = graft.Sessions.hadoopConf(spark)
     val files = listing(conf, path)
     val key = SchemaKey(path,
       files.map { case (s, _) =>
@@ -127,7 +127,7 @@ object Tables {
     * unreadable footer.
     */
   def rowCount(spark: SparkSession, path: String): Long = {
-    val conf = spark.sessionState.newHadoopConf()
+    val conf = graft.Sessions.hadoopConf(spark)
     listing(conf, path).collect {
       case (f, true) if !SummaryFiles(f.getPath.getName) =>
         ParquetFooterReader.readFooter(HadoopInputFile.fromStatus(f, conf),

@@ -50,17 +50,20 @@ object Segments {
   final case class Family(key: String, prefix: String, shape: Shape = Plain)
 
   /** One kind of segmented artifact. `name` is what errors call it,
-    * `owner` the class whose `write` a stale handle calls; a manifest
-    * whose `formatKey` names another `format` is refused (manifests
-    * without the key predate it and pass).
+    * `owner` the class whose `write` a stale handle calls. Its one
+    * readable layout is what its writer stamps: `formatKey` naming
+    * `format`, a value for each build parameter in `params`, and a
+    * non-empty segment list for each family ([[resolve]] refuses
+    * anything else).
     */
   final case class Kind(name: String, owner: String, formatKey: String,
-                        format: String, families: Family*) {
+                        format: String, params: Seq[String],
+                        families: Family*) {
     def keys: Seq[String] = families.map(_.key)
   }
 
-  /** A committed version: its dir and manifest. */
-  final case class Version(dir: String, manifest: Map[String, String]) {
+  /** A committed version's manifest. */
+  final case class Version(manifest: Map[String, String]) {
     def segs(key: String): Seq[String] = Staging.segList(manifest, key)
   }
 
@@ -71,21 +74,28 @@ object Segments {
     Staging.currentVersion(root, store).map(v =>
       Staging.readManifest(Staging.versionDir(root, v)))
 
-  /** Resolve the version `root`'s pointer names and read its manifest,
-    * refusing a format this build does not speak (`action` names what
-    * the caller must not do with it). Throws when nothing was ever
-    * committed ([[exists]] probes).
+  /** Resolve the version `root`'s pointer names and read its manifest:
+    * the one place that decides whether a layout is readable. The
+    * manifest must name the kind's current format and carry every
+    * build parameter and every family's segment list; anything else (a
+    * foreign format, a pre-segment or pre-manifest layout) is refused
+    * with a rebuild error (`action` names what the caller must not do
+    * with it). Throws when nothing was ever committed ([[exists]]
+    * probes).
     */
   def resolve(kind: Kind, root: String, store: PointerStore,
               action: String = "refresh"): Version = {
     val n = Staging.currentVersion(root, store).getOrElse(
       sys.error(s"no committed ${kind.name} at $root (missing LATEST)"))
-    val d = Staging.versionDir(root, n)
-    val mf = Staging.readManifest(d)
-    mf.get(kind.formatKey).filter(_ != kind.format).foreach(f =>
-      sys.error(s"${kind.name} at $root written under '$f'; this build " +
-        s"speaks '${kind.format}' — rebuild, do not $action"))
-    Version(d, mf)
+    val mf = Staging.readManifest(Staging.versionDir(root, n))
+    val fmt = mf.get(kind.formatKey)
+    val missing = (kind.params ++ kind.keys).filterNot(k => mf.get(k).exists(_.nonEmpty))
+    if (!fmt.contains(kind.format) || missing.nonEmpty)
+      sys.error(s"${kind.name} at $root written under " +
+        fmt.fold("no format")(f => s"'$f'") +
+        (if (missing.isEmpty) "" else s" without ${missing.mkString(", ")}") +
+        s"; this build speaks '${kind.format}' — rebuild, do not $action")
+    Version(mf)
   }
 
   /** True iff a complete committed version exists at `root` — the
@@ -167,15 +177,10 @@ object Segments {
     * bucketed catalog entry when bucketed, else a plain scan.
     */
   def open(spark: SparkSession, f: Family, root: String, sid: String,
-           buckets: Int = 0): DataFrame = openAt(spark, f, dir(root, sid), buckets)
-
-  /** [[open]] of the table at `d`: a segment, or a legacy version dir's
-    * table of the family.
-    */
-  def openAt(spark: SparkSession, f: Family, d: String,
-             buckets: Int = 0): DataFrame = f.shape match {
-    case Bucketed(key) if buckets > 0 => Layout.readBucketedTable(spark, d, key, buckets)
-    case _ => Tables.parquet(spark, d)
+           buckets: Int = 0): DataFrame = f.shape match {
+    case Bucketed(key) if buckets > 0 =>
+      Layout.readBucketedTable(spark, dir(root, sid), key, buckets)
+    case _ => Tables.parquet(spark, dir(root, sid))
   }
 
   /** Plain scans of segments `sids`, unioned by name — what a compaction

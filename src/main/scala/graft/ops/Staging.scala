@@ -49,21 +49,9 @@ import org.apache.spark.sql.SparkSession
   */
 object Staging {
 
-  /** The active session's Hadoop conf as `newHadoopConf()` builds it —
-    * the SparkContext's Hadoop conf with every session conf set on top —
-    * without copying its ~1,100 entries on every call when the session
-    * sets only `spark.*` keys: Hadoop reads none of those, so the
-    * SparkContext's own conf (live, so later changes to it count) is
-    * the same conf to a `FileSystem`. A session that sets any other key
-    * (`fs.*`, `hadoop.*`, …) gets the copy.
-    */
-  private[ops] def conf: Configuration = SparkSession.getActiveSession match {
-    case Some(s) =>
-      if (s.sessionState.conf.getAllConfs.keysIterator.forall(_.startsWith("spark.")))
-        s.sparkContext.hadoopConfiguration
-      else s.sessionState.newHadoopConf()
-    case None => new Configuration()
-  }
+  /** The active session's Hadoop conf ([[graft.Sessions.hadoopConf]]). */
+  private[ops] def conf: Configuration =
+    SparkSession.getActiveSession.fold(new Configuration())(graft.Sessions.hadoopConf)
 
   private def fs(p: Path): FileSystem = p.getFileSystem(conf)
 
@@ -430,7 +418,8 @@ object Staging {
   }
 
   /** Read a manifest written by [[writeManifest]]; empty map if the
-    * version predates manifests.
+    * dir has none (a version that pins no segment, and one
+    * [[Segments.resolve]] refuses to open).
     */
   def readManifest(dir: String): Map[String, String] = {
     val p = s"$dir/manifest"

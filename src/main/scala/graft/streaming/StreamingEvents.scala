@@ -132,8 +132,11 @@ object StreamingEvents {
   * State per key = the open session (bounds, count); an event-time
   * timeout closes it. State size is O(active keys), evicted on timeout —
   * bounded like any watermarked operator.
+  *
+  * Serializable: the state function [[sessionize]] ships to executors
+  * calls [[advance]], so it captures this object.
   */
-object StatefulSessions {
+object StatefulSessions extends Serializable {
 
   case class Event(user_id: String, ts: java.sql.Timestamp)
 
@@ -141,6 +144,32 @@ object StatefulSessions {
 
   case class SessionOut(user_id: String, session_id: Long,
       start_ms: Long, end_ms: Long, n_events: Long)
+
+  /** The summary row of a closed session. */
+  def closed(user: String, s: SessionState): SessionOut =
+    SessionOut(user, s.start, s.start, s.lastTs, s.n)
+
+  /** Fold one batch of `user`'s events (any order) into the open
+    * session `open`, in event-time order: an event within `gapMs` of
+    * the session's last event extends it; a larger gap closes it and
+    * starts the next. Returns the sessions closed in the batch, oldest
+    * first, and the session left open — the one sessionizer step both
+    * state APIs run.
+    */
+  def advance(user: String, open: Option[SessionState], rows: Iterator[Event],
+              gapMs: Long): (List[SessionOut], Option[SessionState]) = {
+    var done = List.empty[SessionOut]
+    var cur = open
+    rows.map(_.ts.getTime).toSeq.sorted.foreach { t =>
+      cur = Some(cur match {
+        case Some(s) if t - s.lastTs <= gapMs =>
+          s.copy(lastTs = math.max(s.lastTs, t), n = s.n + 1)
+        case Some(s) => done ::= closed(user, s); SessionState(t, t, 1)
+        case None => SessionState(t, t, 1)
+      })
+    }
+    (done.reverse, cur)
+  }
 
   /** Sessionize a stream of (user_id, ts) with `gapMs` inactivity gap.
     * Emits one row per CLOSED session (watermark-timeout driven).
@@ -158,27 +187,14 @@ object StatefulSessions {
       if (state.hasTimedOut) {
         val s = state.get
         state.remove()
-        Iterator(SessionOut(user, s.start, s.start, s.lastTs, s.n))
+        Iterator(closed(user, s))
       } else {
-        val ts = rows.map(_.ts.getTime).toSeq.sorted
-        var closed = List.empty[SessionOut]
-        var cur = state.getOption
-        ts.foreach { t =>
-          cur match {
-            case Some(s) if t - s.lastTs <= gapMs =>
-              cur = Some(s.copy(lastTs = math.max(s.lastTs, t), n = s.n + 1))
-            case Some(s) => // gap exceeded in-batch: close, start next
-              closed ::= SessionOut(user, s.start, s.start, s.lastTs, s.n)
-              cur = Some(SessionState(t, t, 1))
-            case None =>
-              cur = Some(SessionState(t, t, 1))
-          }
-        }
+        val (done, cur) = advance(user, state.getOption, rows, gapMs)
         cur.foreach { s =>
           state.update(s)
           state.setTimeoutTimestamp(s.lastTs + gapMs)
         }
-        closed.reverseIterator
+        done.iterator
       }
     }
 
@@ -204,7 +220,7 @@ object TwsSessions {
   import org.apache.spark.sql.{Dataset, Encoders}
   import org.apache.spark.sql.streaming.{
     ExpiredTimerInfo, OutputMode, StatefulProcessor, TTLConfig, TimeMode, TimerValues, ValueState}
-  import StatefulSessions.{Event, SessionOut, SessionState}
+  import StatefulSessions.{Event, SessionOut, SessionState, advance, closed}
 
   class SessionProcessor(gapMs: Long)
       extends StatefulProcessor[String, Event, SessionOut] {
@@ -216,26 +232,14 @@ object TwsSessions {
 
     override def handleInputRows(user: String, rows: Iterator[Event],
         timerValues: TimerValues): Iterator[SessionOut] = {
-      val ts = rows.map(_.ts.getTime).toSeq.sorted
-      var closed = List.empty[SessionOut]
-      var cur = if (session.exists()) Some(session.get()) else None
-      ts.foreach { t =>
-        cur match {
-          case Some(s) if t - s.lastTs <= gapMs =>
-            cur = Some(s.copy(lastTs = math.max(s.lastTs, t), n = s.n + 1))
-          case Some(s) => // gap exceeded in-batch: close, start next
-            closed ::= SessionOut(user, s.start, s.start, s.lastTs, s.n)
-            cur = Some(SessionState(t, t, 1))
-          case None =>
-            cur = Some(SessionState(t, t, 1))
-        }
-      }
+      val (done, cur) = advance(user,
+        if (session.exists()) Some(session.get()) else None, rows, gapMs)
       cur.foreach { s =>
         session.update(s)
         getHandle.listTimers().foreach(getHandle.deleteTimer)
         getHandle.registerTimer(s.lastTs + gapMs)
       }
-      closed.reverseIterator
+      done.iterator
     }
 
     override def handleExpiredTimer(user: String, timerValues: TimerValues,
@@ -244,7 +248,7 @@ object TwsSessions {
         val s = session.get()
         if (expired.getExpiryTimeInMs >= s.lastTs + gapMs) {
           session.clear()
-          return Iterator(SessionOut(user, s.start, s.start, s.lastTs, s.n))
+          return Iterator(closed(user, s))
         }
       }
       Iterator.empty

@@ -975,56 +975,79 @@ class DedupSpec extends SparkSpec {
     assert(fresh.clusters.as[(Long, Long)].collect().toSet == expectClusters)
   }
 
-  test("legacy pre-manifest artifact: read flags guessed parameters and " +
-      "refresh trusts the caller's explicit ones instead of rejecting") {
-    val d1 = Seq((1L, "alpha beta gamma delta epsilon zeta")).toDF("doc_id", "text")
-    val d2 = Seq((2L, "alpha beta gamma delta epsilon zeta")).toDF("doc_id", "text")
-    val dir = java.nio.file.Files.createTempDirectory("dupgraph_legacy").toString
-    // hand-lay the pre-segment, pre-manifest layout: three plain tables
-    // in the version dir, pointer, NO manifest — built with n=4/0.7
-    val g = Dedup.dupGraph(d1, col("text"), col("doc_id"), n = 4, threshold = 0.7)
-    try {
-      g.pairs.write.parquet(s"$dir/v1/pairs")
-      g.clusters.write.parquet(s"$dir/v1/clusters")
-      g.index.write.parquet(s"$dir/v1/index")
-    } finally g.unpersist()
-    graft.ops.Staging.writeString(s"$dir/LATEST", "1")
-    val stored = DupGraph.read(spark, dir)
-    // defaults are guesses (n=3, 0.5) — the caller's correct explicit
-    // parameters must WIN, not be rejected against the guess
-    val r = Dedup.refreshDupGraph(stored, d2, col("text"), col("doc_id"),
-      n = 4, threshold = 0.7)
-    try {
-      assert(r.n == 4 && r.threshold == 0.7)
-      // and the refresh actually joined in the stored space: the two
-      // identical docs pair up
-      assert(r.pairs.select("da", "db").as[(Long, Long)].collect().toSet ==
-        Set((1L, 2L)))
-    } finally r.unpersist()
-  }
-
-  test("compact on a legacy pre-segmented artifact is a no-op (both " +
-      "keepPairs modes), not a reduce-of-empty crash") {
+  test("one readable layout: a pre-segment artifact, and a manifest " +
+      "without a build parameter, a segment family or the format key, " +
+      "are refused with the rebuild error, and nothing is committed") {
+    import graft.ops.Staging
+    def tmp(p: String) = java.nio.file.Files.createTempDirectory(p).toString
+    def refused(action: String)(body: => Any)
+               (implicit pos: org.scalactic.source.Position): Unit = {
+      val e = intercept[RuntimeException](body)
+      assert(e.getMessage.contains(s"rebuild, do not $action"), e.getMessage)
+    }
+    /** Rewrite the committed manifest of `root` through `f`. */
+    def edit(root: String)(f: Map[String, String] => Map[String, String]): Unit = {
+      val d = Staging.versionDir(root, Staging.currentVersion(root).get)
+      Staging.writeManifest(d, f(Staging.readManifest(d)))
+    }
     val d1 = Seq((1L, "alpha beta gamma delta epsilon zeta"),
       (2L, "alpha beta gamma delta epsilon zeta")).toDF("doc_id", "text")
-    val dir = java.nio.file.Files.createTempDirectory("dupgraph_lc").toString
-    val g = Dedup.dupGraph(d1, col("text"), col("doc_id"))
+    val d2 = Seq((3L, "alpha beta gamma delta epsilon zeta")).toDF("doc_id", "text")
+
+    // the pre-segment, pre-manifest DupGraph layout: three plain tables
+    // in the version dir, the pointer, no manifest
+    val legacy = tmp("dupgraph_legacy")
+    val g = Dedup.dupGraph(d1, col("text"), col("doc_id"), n = 4, threshold = 0.7)
     try {
-      g.pairs.write.parquet(s"$dir/v1/pairs")
-      g.clusters.write.parquet(s"$dir/v1/clusters")
-      g.index.write.parquet(s"$dir/v1/index")
+      g.pairs.write.parquet(s"$legacy/v1/pairs")
+      g.clusters.write.parquet(s"$legacy/v1/clusters")
+      g.index.write.parquet(s"$legacy/v1/index")
     } finally g.unpersist()
-    graft.ops.Staging.writeString(s"$dir/LATEST", "1")
-    val before = DupGraph.read(spark, dir).clusters
-      .as[(Long, Long)].collect().toSet
-    // pre-fix, keepPairs=false fell past the compact-already early
-    // returns (psegs empty, so the prune probe could not fire) and
-    // threw UnsupportedOperationException on reduce of the empty isegs
-    DupGraph.compact(spark, dir, keepPairs = false)
-    DupGraph.compact(spark, dir, keepPairs = true)
-    assert(graft.ops.Staging.currentVersion(dir).contains(1L),
-      "legacy no-op must not commit a new version")
-    assert(DupGraph.read(spark, dir).clusters
-      .as[(Long, Long)].collect().toSet == before)
+    Staging.writeString(s"$legacy/LATEST", "1")
+    refused("refresh")(DupGraph.read(spark, legacy))
+    refused("refresh")(Dedup.refreshDupGraph(DupGraph.read(spark, legacy), d2,
+      col("text"), col("doc_id"), n = 4, threshold = 0.7))
+    refused("compact")(DupGraph.compact(spark, legacy, keepPairs = true))
+    refused("compact")(DupGraph.compact(spark, legacy, keepPairs = false))
+    assert(Staging.currentVersion(legacy).contains(1L))
+    assert(Staging.list(legacy).toSet == Set("LATEST", "v1"),
+      "a refused artifact must not be written to")
+
+    // a segmented DupGraph whose manifest lost its build parameters, or
+    // whose pairs list is empty
+    val seg = tmp("dupgraph_noparams")
+    val g2 = Dedup.dupGraph(d1, col("text"), col("doc_id"), n = 4, threshold = 0.7)
+    try g2.write(seg, buckets = 4) finally g2.unpersist()
+    edit(seg)(_ -- Seq("n", "threshold"))
+    refused("refresh")(DupGraph.read(spark, seg))
+    refused("compact")(DupGraph.compact(spark, seg, keepPairs = false))
+    edit(seg)(_ ++ Map("n" -> "4", "threshold" -> "0.7", "psegs" -> ""))
+    refused("refresh")(DupGraph.read(spark, seg))
+    edit(seg)(_ + ("psegs" -> "p1"))
+    assert(DupGraph.read(spark, seg).n == 4, "the restored manifest reads again")
+    assert(Staging.currentVersion(seg).contains(1L))
+
+    // an ANN index whose manifest lost its centroid catalog
+    val ann = tmp("annidx_nocent")
+    val vecs = Similarity.withNorm((0L until 200L).map(i =>
+        (i, Seq.tabulate(8)(j => (math.sin(i * 0.37 + j * 1.3) + (i % 5) * 0.2).toFloat)))
+      .toDF("vec_id", "embedding"), col("vec_id"), col("embedding"))
+    AnnIndex.train(vecs, m = 2, subDim = 4, lloydIters = 1).write(ann)
+    edit(ann)(_ - "centseg")
+    refused("refresh")(AnnIndex.read(spark, ann))
+    refused("compact")(AnnIndex.compact(spark, ann))
+
+    // novelty and Hamming manifests without their format key
+    val nov = tmp("novidx_nofmt")
+    NoveltyIndex.build(d1, col("text"), col("doc_id"), n = 3, buckets = 4).write(nov)
+    edit(nov)(_ - "hash")
+    refused("refresh")(NoveltyIndex.read(spark, nov))
+    val ham = tmp("hamidx_nofmt")
+    HammingIndex.build(Seq(1L, 2L, 3L).map(i => (i, Multimodal.targetFp(i)))
+      .toDF("doc_id", "fp"), maxDist = 3, buckets = 4).write(ham)
+    edit(ham)(_ - "fmt")
+    refused("refresh")(HammingIndex.read(spark, ham))
+    refused("compact")(HammingIndex.compact(spark, ham, rebucket = Some(8)))
+    Seq(ann, nov, ham).foreach(r => assert(Staging.currentVersion(r).contains(1L)))
   }
 }

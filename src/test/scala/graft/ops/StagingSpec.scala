@@ -416,14 +416,27 @@ class StagingSpec extends SparkSpec {
       "counts it") {
     val dir = tmp("stg_conf")
     Staging.writeString(s"$dir/x", "1")
+    spark.range(3).write.parquet(s"$dir/pq")
     val x = s"${SchemeFs.Scheme}://$dir/x"
+    val pq = s"${SchemeFs.Scheme}://$dir/pq"
     val impl = s"fs.${SchemeFs.Scheme}.impl"
     // uncached, so every call resolves the scheme through the conf it gets
     val uncached = s"fs.${SchemeFs.Scheme}.impl.disable.cache"
-    def resolves: Boolean = scala.util.Try(Staging.exists(x)).toOption.contains(true)
+    def stagingResolves: Boolean = scala.util.Try(Staging.exists(x)).toOption.contains(true)
+    def tablesResolve: Seq[Boolean] = Seq(
+      scala.util.Try(graft.model.Tables.rowCount(spark, pq) == 3),
+      scala.util.Try(graft.model.Tables.parquet(spark, pq).schema.fieldNames.toSeq == Seq("id"))
+    ).map(_.toOption.contains(true))
+    // every path resolves alike, and the answer is the one of them all
+    def resolves: Boolean = {
+      val all = stagingResolves +: tablesResolve
+      assert(all.distinct.size == 1, s"Staging, parquet, rowCount: $all")
+      all.head
+    }
     val hc = spark.sparkContext.hadoopConfiguration
     // only spark.* keys on the session: the SparkContext's conf, no copy
     assert(Staging.conf eq hc)
+    assert(graft.Sessions.hadoopConf(spark) eq hc)
     assert(!resolves)
 
     spark.conf.set(impl, classOf[SchemeFs].getName)
